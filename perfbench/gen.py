@@ -143,11 +143,10 @@ def make_drop(rng: random.Random, deck: _Deck, conv_ids: list[int]) -> list[dict
     return rows
 
 
-def generate(kind: str, seed: int, convs_per_drop: int | None = None):
+def generate(kind: str, seed: int):
     """(dims, drops): dictionary tables and the transcript drops in
     delivery order."""
     n_ent, per_drop, n_drops, redeliver = KINDS[kind]
-    per_drop = convs_per_drop or per_drop
     rng = random.Random(seed)
     gazetteer = make_gazetteer(rng, n_ent)
     dicts = make_dictionaries(rng, n_ent)
@@ -183,9 +182,8 @@ def reference(dims: dict, drops: list[list[dict]]) -> dict:
             "appended": added}
 
 
-def write_entry(out: str, kind: str, seed: int,
-                convs_per_drop: int | None = None) -> None:
-    dims, drops = generate(kind, seed, convs_per_drop)
+def write_entry(out: str, kind: str, seed: int) -> None:
+    dims, drops = generate(kind, seed)
     tmp = out + ".tmp"
     os.makedirs(os.path.join(tmp, "dims"), exist_ok=True)
     os.makedirs(os.path.join(tmp, "drops"), exist_ok=True)

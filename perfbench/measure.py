@@ -15,9 +15,11 @@ from __future__ import annotations
 import argparse
 import contextlib
 import functools
+import gc
 import glob
 import json
 import os
+import re
 import shutil
 import statistics
 import sys
@@ -48,7 +50,7 @@ class Pass:
     batches: list[tuple[int, int, float]] = field(default_factory=list)
     extra: dict = field(default_factory=dict)
     tracers: dict = field(default_factory=dict)
-    window: tuple[float, float] = (0.0, 0.0)
+    window: tuple[float, float] = (0.0, 0.0)  # the span ``wall`` times
 
 
 class Bench:
@@ -62,11 +64,14 @@ class Bench:
     def setup(self) -> dict:
         from rkts_migration_spark.session import get_spark
 
-        # a fixed-size heap (-Xms = -Xmx): without it the peak resident
-        # memory of a pass swings by ~25% with when G1 grows the heap
+        # a fixed-size heap (-Xms = -Xmx), so that GC timing does not swing
+        # with when G1 grows the heap; the GC log gives the heap's address
+        # range and its occupancy after each collection
+        self.gc_log = os.path.join(self.work, "gc.log")
         conf = {"spark.driver.memory": "3g",
                 "spark.driver.extraJavaOptions":
-                    f"-Xms3g -Djava.io.tmpdir={os.environ.get('TMPDIR', '/tmp')}",
+                    f"-Xms3g -Xlog:gc,pagesize:file={self.gc_log}:timemillis "
+                    f"-Djava.io.tmpdir={os.environ.get('TMPDIR', '/tmp')}",
                 "spark.ui.showConsoleProgress": "false"}
         if self.a.trace:
             self.eventlog_dir = os.path.join(self.work, "eventlog")
@@ -78,26 +83,60 @@ class Bench:
         self.spark = get_spark(app_name="perfbench", master="local[4]",
                                extra_conf=conf)
         t_session = time.time()
-
-        def load(name):
-            df = self.spark.read.parquet(
-                os.path.join(self.a.entry, "dims", f"{name}.parquet")).cache()
-            df.count()
-            return df
-
-        with ThreadPoolExecutor(len(DIMS)) as pool:
-            self.dims = dict(zip(DIMS, pool.map(load, DIMS)))
+        self.dims = {name: self.spark.read.parquet(
+            os.path.join(self.a.entry, "dims", f"{name}.parquet"))
+            for name in DIMS}
+        self.cache_dims()
         t_dims = time.time()
+        self.base_rdds = self.persistent_rdds()
         return {"session.start_s": t_session - self.a.t0,
                 "session.dict_load_s": t_dims - t_session}
 
+    def cache_dims(self) -> None:
+        with ThreadPoolExecutor(len(DIMS)) as pool:
+            list(pool.map(lambda df: df.cache().count(), self.dims.values()))
+
+    def persistent_rdds(self) -> int:
+        return self.spark.sparkContext._jsc.getPersistentRDDs().size()
+
     def clean(self) -> int:
-        """Drop every cache and collect the JVM heap; returns the number
-        of RDDs that were still persisted."""
-        n = self.spark.sparkContext._jsc.getPersistentRDDs().size()
+        """Collect the Python and JVM heaps with the pass's caches still
+        held (the GC log records what the pass retained), drop them, cache
+        the dictionary tables again and collect once more. Returns the
+        number of RDDs the pass left persisted."""
+        n = self.persistent_rdds() - self.base_rdds
+        # py4j proxies the pass dropped pin their JVM objects until
+        # Python's collector runs; without this the retained heap of a
+        # stream_6k pass read anywhere from 170 to 560 MB between runs
+        gc.collect()
+        self.spark._jvm.System.gc()
         self.spark.catalog.clearCache()
+        self.cache_dims()
         self.spark._jvm.System.gc()
         return n
+
+    def heap(self) -> tuple[int, int]:
+        """Address range of the JVM's heap, from the GC log."""
+        with open(self.gc_log) as f:
+            m = re.search(r"Heap: .*base=(0x[0-9a-f]+) .*size=(\d+)([KMG])",
+                          f.read())
+        base = int(m.group(1), 16)
+        return base, base + int(m.group(2)) * 1024 ** " KMG".index(m.group(3))
+
+    def live_heap_mb(self, windows) -> float:
+        """Largest heap occupancy after a full collection within
+        ``windows``: the collections ``clean`` forces at pass end. Young
+        collections are left out: what they leave in the heap includes
+        old-generation garbage, which swung the figure by ±20%."""
+        unit = {"K": 1 / 1024, "M": 1, "G": 1024}
+        peak = 0.0
+        with open(self.gc_log) as f:
+            for line in f:
+                m = re.match(r"\[(\d+)ms\] GC\(\d+\) Pause Full .*"
+                             r"\d+[KMG]->(\d+)([KMG])\(", line)
+                if m and any(a <= int(m.group(1)) / 1e3 <= b for a, b in windows):
+                    peak = max(peak, int(m.group(2)) * unit[m.group(3)])
+        return peak
 
     def fresh(self, name: str) -> str:
         path = os.path.join(self.work, name)
@@ -141,6 +180,7 @@ def inmem_pass(b: Bench, phase) -> Pass:
     with phase("inmem"):
         got = spark_digest(build_triples_inmem(b.spark, b.tables()))
     p.wall = time.time() - t0
+    p.window = (t0, t0 + p.wall)
     b.gate(p, "in-memory output", got, b.ref["drops"][0])
     p.extra["cached_rdds_end"] = b.clean()
     return p
@@ -157,6 +197,7 @@ def ckpt_pass(b: Bench, phase, resume: bool = True) -> Pass:
     with phase("pass"):
         got = spark_digest(run_pipeline(b.spark, b.tables(), root).triples)
     p.wall = time.time() - t0
+    p.window = (t0, t0 + p.wall)
     b.gate(p, "checkpointed output", got, want)
     p.extra["cached_rdds_end"] = b.clean()
     if not resume:
@@ -203,6 +244,7 @@ def stream_pass(b: Bench, phase) -> Pass:
         got = spark_digest(b.spark.read.parquet(store)
                            .select("subj", "pred", "obj"))
     p.wall = time.time() - t0
+    p.window = (t0, t0 + p.wall)
     prev = t0
     for bid, n, t in events:
         p.batches.append((bid, n, t - prev))
@@ -259,20 +301,20 @@ def run_pass(b: Bench, fn, phase, sampler=None) -> Pass:
     s0 = host.steal_cs()
     t0 = time.time()
     if sampler:
-        sampler.active = True
+        sampler.begin()
     try:
         p = fn(b, phase)
     except Exception as e:  # a raising pass is a failed pass
-        p = Pass(wall=time.time() - t0, errors=[f"raised {e!r}"[:500]])
+        p = Pass(wall=time.time() - t0, errors=[f"raised {e!r}"[:500]],
+                 window=(t0, time.time()))
     finally:
         if sampler:
-            sampler.active = False
-    p.window = (t0, time.time())
+            sampler.end()
     p.extra["steal_cs"] = host.steal_cs() - s0
     return p
 
 
-def end_to_end(setup: dict, passes: list[Pass], rss: float) -> dict:
+def end_to_end(setup: dict, passes: list[Pass], mem: float) -> dict:
     wall = statistics.median(p.wall for p in passes)
     triples = passes[-1].triples
     resumes = [p.resume for p in passes if p.resume is not None]
@@ -285,7 +327,7 @@ def end_to_end(setup: dict, passes: list[Pass], rss: float) -> dict:
         # a batch pass is one batch
         "batch_p50_s": statistics.median(new_batches) if new_batches else wall,
         "setup_s": setup["session.start_s"] + setup["session.dict_load_s"],
-        "peak_rss_mb": rss,
+        "peak_rss_mb": mem,
     }
 
 
@@ -362,7 +404,7 @@ def main() -> int:
     passes: list[Pass] = []
     inmem = None
     try:
-        with host.RssSampler() as sampler:
+        with host.MemSampler(host.child_jvm(os.getpid()), b.heap()) as sampler:
             warm = run_pass(b, warm_fn, _untraced)
             if a.trace:
                 plain = run_pass(b, fn, _untraced)
@@ -393,7 +435,8 @@ def main() -> int:
         metrics = per_layer(b, setup, warm, plain, traced, inmem)
         metrics["fail_frac"] = len(failed) / len(attempted)
     else:
-        metrics = end_to_end(setup, passes, sampler.peak_mb)
+        metrics = end_to_end(setup, passes, max(sampler.nonheap_mb, default=0)
+                             + b.live_heap_mb(sampler.windows))
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         declared = json.load(f)["per_layer" if a.trace else "end_to_end"]
     units = {m["name"]: m["unit"] for m in declared}
