@@ -11,6 +11,7 @@ here subsumes both (SURVEY.md §4.2).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -70,7 +71,8 @@ def build_canonical_map(
 
 def _driver_side_cc_rows(spark, rows) -> DataFrame:
     """Union-find on collected edge rows; same representative rule as
-    the distributed loop (numeric-aware min). Zero extra jobs."""
+    the distributed loop (numeric-aware min). Zero extra jobs; the
+    result is a JVM-local relation (entity_id string, canon_id string)."""
     from .vocab import id_sort_key
 
     parent: dict[str, str] = {}
@@ -94,7 +96,12 @@ def _driver_side_cc_rows(spark, rows) -> DataFrame:
     for members in comps.values():
         rep = min(members, key=id_sort_key)
         out.extend((m, rep) for m in members)
-    return spark.createDataFrame(out, "entity_id string, canon_id string")
+    # from a Python list this would plan as a Python RDD, forking Python
+    # workers in every job that broadcasts it
+    entity_ids, canon_ids = zip(*out) if out else ((), ())
+    return spark.createDataFrame(pa.table(
+        [pa.array(entity_ids, pa.string()), pa.array(canon_ids, pa.string())],
+        names=["entity_id", "canon_id"]))
 
 
 def apply_canonical(

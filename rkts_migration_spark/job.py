@@ -108,7 +108,8 @@ def main(argv: list[str] | None = None) -> int:
         "audit_sec": round(audit_sec, 3),
         "nt_sink_sec": nt_sec,
         "stages_committed": {
-            k: {"rows": m["rows"], "n_partitions": m["n_partitions"]}
+            k: {"rows": m["rows"], "n_partitions": m["n_partitions"],
+                **m["metrics"]}
             for k, m in res.manifests.items()
         },
     }

@@ -44,28 +44,25 @@ def surface_winners(gazetteer: DataFrame) -> DataFrame:
 
 def link_mentions(mentions: DataFrame, gazetteer: DataFrame) -> DataFrame:
     """mentions (conv_id, turn_idx, begin, matched) -> + (entity_id, lang)."""
-    winners = surface_winners(gazetteer)
-    return mentions.join(
-        F.broadcast(winners), mentions.matched == winners.surf_norm, "inner"
-    ).drop("surf_norm")
+    return link_and_canonicalize(mentions, surface_winners(gazetteer))
 
 
-def link_and_canonicalize(
-    mentions: DataFrame, gazetteer: DataFrame, canonical_map: DataFrame
-) -> DataFrame:
-    """link_mentions + apply_canonical in ONE pass over the mention
-    stream: canon_id is a pure function of entity_id, which is a pure
-    function of the matched surface, so the canonical join composes
-    onto the gazetteer-sized winners DIMENSION (driver-cheap) and the
-    23M-row (at sf0.1; ~10^12-turn-proportional in production) mention
-    stream pays a single broadcast hash join instead of two
-    back-to-back ones. Output schema and values are identical to
-    apply_canonical(link_mentions(...), ...)."""
+def canonical_winners(gazetteer: DataFrame, canonical_map: DataFrame) -> DataFrame:
+    """surface_winners + canon_id: canon_id is a pure function of the
+    matched surface, so canonicalization composes onto this
+    gazetteer-sized dimension instead of the mention stream."""
     from .canonicalize import apply_canonical
 
-    winners = apply_canonical(
+    return apply_canonical(
         surface_winners(gazetteer), canonical_map, "entity_id", "canon_id"
     )
+
+
+def link_and_canonicalize(mentions: DataFrame, winners: DataFrame) -> DataFrame:
+    """Broadcast-join mentions to a ``winners`` dimension on the matched
+    surface. With canonical_winners the 23M-row (at sf0.1) mention
+    stream is linked and canonicalized by ONE broadcast hash join, with
+    the schema and values of apply_canonical(link_mentions(...), ...)."""
     return mentions.join(
         F.broadcast(winners), mentions.matched == winners.surf_norm, "inner"
     ).drop("surf_norm")

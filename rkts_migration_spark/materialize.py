@@ -143,8 +143,6 @@ def build_entity_iri_map(
     regexp_extracts) on the mention stream would run per mention row;
     every canon_id in the stream comes from the canonicalized gazetteer,
     so the complete key universe is dimension-sized by construction."""
-    from .canonicalize import apply_canonical
-
     ids = gazetteer.select("entity_id").distinct()
     ids = apply_canonical(ids, canonical_map, "entity_id", "canon_id")
     canon = ids.select("canon_id").distinct()
@@ -288,13 +286,13 @@ def assemble_triples(
     turns_with_section: DataFrame,
     linked_canon: DataFrame,
     canonical_map: DataFrame,
-    abstract_lookup: DataFrame,
+    entity_iri_map: DataFrame,
     entity_props: DataFrame,
     salt_buckets: int = 16,
-    gazetteer: DataFrame | None = None,
 ) -> DataFrame:
     """Union of every family — the global-graph union (U1 analog,
-    /root/reference/utils.php:833-840).
+    /root/reference/utils.php:833-840). ``entity_iri_map`` is
+    build_entity_iri_map's dimension, built once by the caller.
 
     No global distinct: the families are pairwise disjoint (each owns
     its predicates) and each is internally unique — mentions and props
@@ -303,19 +301,6 @@ def assemble_triples(
     A trailing distinct would re-shuffle the entire output for nothing
     — at 100 TB that is the single biggest avoidable exchange."""
     mentioned = linked_canon.select("canon_id").distinct()
-    if gazetteer is not None:
-        entity_iri_map = build_entity_iri_map(
-            gazetteer, canonical_map, abstract_lookup
-        )
-    else:  # fall back to the mention stream for the key universe
-        entity_iri_map = mentioned.join(
-            F.broadcast(abstract_lookup), "canon_id", "left"
-        ).select(
-            "canon_id",
-            entity_iri_col(F.col("canon_id"), F.col("abstract_local")).alias(
-                "entity_iri"
-            ),
-        )
     fams = [
         turn_triples(turns_with_section),
         conv_triples(turns_with_section),

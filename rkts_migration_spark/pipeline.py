@@ -1,106 +1,147 @@
-"""The checkpointed extract -> link -> canonicalize -> materialize
-pipeline (SURVEY.md §7 stage design).
-
-Stages, each committed as a stage table with per-partition lineage
-(sources/tables.py) before the next starts:
+"""The extract -> link -> canonicalize -> materialize pipeline (SURVEY.md
+§7 stage design), composed once as the ordered stages
 
   ordered    transcripts + section islands (one conv-partitioned shuffle)
-  mentions   Arrow-batched trie extraction (extract.py)
-  linked     gazetteer-scored linking + canonical ids (broadcast joins)
+  mentions   gazetteer matching (extract.py)
+  linked     surface winners + canonical ids (one broadcast join)
   triples    full (subj, pred, obj) assembly (materialize.py)
 
-Resume: a re-run with the same checkpoint root and ``resume=True``
-skips every stage whose manifest says complete — kill the job between
-stages and the restart reproduces the identical triple set
-(tests/test_pipeline.py::test_resume_reproduces_triples).
+each built from the ones before it and passed through a boundary, the
+one thing the two forms differ in:
+
+- build_triples_inmem persists: ``ordered`` and ``linked``, which feed
+  several later stages or triple families, are cached and materialized.
+- run_pipeline commits: each stage is written as a stage table plus
+  manifest (sources/tables.py), and later stages read the committed
+  table back, schema known, with no Spark job. A re-run with the same
+  root and ``resume=True`` reads every stage whose manifest says
+  complete instead of building it, so a job killed between stages
+  restarts to the identical triple set.
+
+The dictionary-sized tables — canonical map, normalized surfaces,
+canonicalized surface winners, minted entity IRIs — are built on one
+background thread overlapped with the ``ordered`` boundary, as
+JVM-local relations (``createDataFrame`` of an Arrow table, planned as
+``LocalRelation``). Every join with them is a forced broadcast, so they
+are bounded by driver memory already; local, they run no dictionary
+job inside a per-row stage and fork no Python worker.
 """
 
 from __future__ import annotations
 
 import uuid
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .canonicalize import build_abstract_lookup, build_canonical_map
 from .extract import _normalized_surfaces, extract_mentions
-from .link import link_and_canonicalize
-from .materialize import assemble_triples
+from .link import canonical_winners, link_and_canonicalize
+from .materialize import assemble_triples, build_entity_iri_map
 from .operators.sections import with_section_index
 from .sources.tables import read_stage, stage_is_complete, write_stage
 
 STAGES = ("ordered", "mentions", "linked", "triples")
 
+# stages read by more than one later stage or triple family: the
+# in-memory boundary caches these, so that no consumer re-runs them
+REUSED = ("ordered", "linked")
+
+@dataclass(frozen=True)
+class _Dictionaries:
+    surfaces: list[str]
+    canonical_map: DataFrame
+    winners: DataFrame
+    entity_iri_map: DataFrame
+
+
+def _local(df: DataFrame) -> DataFrame:
+    """The rows of a dictionary-sized frame as a JVM-local relation."""
+    return df.sparkSession.createDataFrame(df.toArrow())
+
+
+def _build_dictionaries(tables: dict[str, DataFrame]) -> _Dictionaries:
+    """Serial driver work (collects, union-find, Arrow round trips) whose
+    wall is the same at every cluster size: run it off the critical path."""
+    canonical_map = build_canonical_map(
+        tables["id_remap"], tables["cross_corpus_map"], tables["same_text_map"]
+    )
+    abstract_lookup = build_abstract_lookup(tables["abstract_map"], canonical_map)
+    return _Dictionaries(
+        surfaces=_normalized_surfaces(tables["gazetteer"]),
+        canonical_map=canonical_map,
+        winners=_local(canonical_winners(tables["gazetteer"], canonical_map)),
+        entity_iri_map=_local(build_entity_iri_map(
+            tables["gazetteer"], canonical_map, abstract_lookup
+        )),
+    )
+
+
+def _compose(
+    tables: dict[str, DataFrame],
+    boundary: Callable[[str, Callable[[], DataFrame]], DataFrame],
+    salt_buckets: int = 16,
+    stop_after: str | None = None,
+) -> DataFrame:
+    """Run the stages in order; ``boundary(stage, build)`` returns the
+    frame later stages read. Returns the last stage run (``stop_after``,
+    else ``triples``). ``tables`` needs: transcripts, gazetteer,
+    id_remap, cross_corpus_map, same_text_map, abstract_map,
+    entity_props."""
+    done: dict[str, DataFrame] = {}
+    with ThreadPoolExecutor(1) as pool:
+        pending = pool.submit(_build_dictionaries, tables)
+        builds = {
+            "ordered": lambda: with_section_index(tables["transcripts"]),
+            "mentions": lambda: extract_mentions(
+                done["ordered"], tables["gazetteer"], pending.result().surfaces
+            ),
+            "linked": lambda: link_and_canonicalize(
+                done["mentions"], pending.result().winners
+            ),
+            "triples": lambda: assemble_triples(
+                done["ordered"], done["linked"], pending.result().canonical_map,
+                pending.result().entity_iri_map, tables["entity_props"],
+                salt_buckets=salt_buckets,
+            ),
+        }
+        for stage in STAGES:
+            done[stage] = boundary(stage, builds[stage])
+            if stage == stop_after:
+                break
+        pending.result()  # raises a failure even when no stage needed it
+    return done[stage]
+
 
 def build_triples_inmem(
     spark: SparkSession, tables: dict[str, DataFrame], salt_buckets: int = 16
 ) -> DataFrame:
-    """Compose the full pipeline with no checkpoint IO (driver contract
-    and bench; production runs use run_pipeline for resumability).
+    """The pipeline with no checkpoint IO (driver contract, bench and
+    streaming; production runs use run_pipeline for resumability).
 
-    ``ordered`` and ``linked`` feed several triple families each, so
-    they are persisted (memory-and-disk) — without this the Python
-    extraction stage would re-run once per family, the same work the
-    checkpointed path avoids by writing stage tables.
+    REUSED stages are materialized eagerly: the triple families are
+    plan branches that AQE submits CONCURRENTLY; left lazy, their tasks
+    race to build the same cache partitions and block on the cache lock
+    while holding task slots (observed: 4 duplicate 64-task stages
+    spanning the whole extraction phase). When a later stage raises,
+    the caches are released."""
+    held: list[DataFrame] = []
 
-    The serial driver work — dictionary collect jobs, the union-find
-    fixpoint, and the py4j-heavy construction + eager analysis of the
-    assemble DAG — is parallelism-INDEPENDENT wall: inline it adds the
-    same seconds at every cluster size and caps scaling efficiency
-    (measured: ~3s of inter-job driver gaps at 8 cores inside a 24s
-    wall). It only touches the dimension tables, never the transcript
-    stream, so it runs on a background thread overlapped with the two
-    big cache-build actions; the tiny collect jobs slot into free task
-    slots under the FIFO scheduler."""
-    from concurrent.futures import ThreadPoolExecutor
+    def persist(stage: str, build: Callable[[], DataFrame]) -> DataFrame:
+        df = build()
+        if stage in REUSED:
+            held.append(df.persist())
+            df.count()
+        return df
 
-    ordered = with_section_index(tables["transcripts"]).persist()
-
-    def _dimension_work():
-        canonical_map = build_canonical_map(
-            tables["id_remap"], tables["cross_corpus_map"],
-            tables["same_text_map"],
-        )
-        surfaces = _normalized_surfaces(tables["gazetteer"])
-        return canonical_map, surfaces
-
-    with ThreadPoolExecutor(1) as pool:
-        dim_fut = pool.submit(_dimension_work)
-        # Eager materialization: the triple families are independent
-        # plan branches that AQE submits CONCURRENTLY; left lazy, their
-        # tasks race to build the same cache partitions and block on
-        # the per-partition cache lock while holding task slots
-        # (observed: 4 duplicate 64-task stages spanning the whole
-        # extraction phase). One eager pass each runs extraction
-        # exactly once at full parallelism; every family then reads the
-        # finished cache.
-        ordered.count()
-        canonical_map, surfaces = dim_fut.result()
-
-    mentions = extract_mentions(ordered, tables["gazetteer"], surfaces)
-    # one broadcast join over the mention stream (canonicalization is
-    # pre-composed onto the winners dimension — see link_and_canonicalize)
-    linked = link_and_canonicalize(
-        mentions, tables["gazetteer"], canonical_map
-    ).persist()
-
-    def _assemble_dag():
-        abstract_lookup = build_abstract_lookup(
-            tables["abstract_map"], canonical_map
-        )
-        return assemble_triples(
-            ordered, linked, canonical_map, abstract_lookup,
-            tables["entity_props"], salt_buckets=salt_buckets,
-            gazetteer=tables["gazetteer"],
-        )
-
-    with ThreadPoolExecutor(1) as pool:
-        # the assemble DAG is hundreds of Column expressions (py4j
-        # round-trips) + eager Catalyst analysis of the union plan —
-        # build it while the linked cache materializes
-        dag_fut = pool.submit(_assemble_dag)
-        linked.count()
-        return dag_fut.result()
+    try:
+        return _compose(tables, persist, salt_buckets)
+    except BaseException:
+        for df in held:
+            df.unpersist()
+        raise
 
 
 @dataclass
@@ -119,76 +160,20 @@ def run_pipeline(
     salt_buckets: int = 16,
     stop_after: str | None = None,
 ) -> RunResult:
-    """Run (or resume) the full pipeline; returns the triples DataFrame.
+    """Run (or resume) the full pipeline; returns the triples DataFrame
+    and the manifests of the stages this run committed.
 
-    ``tables`` needs: transcripts, gazetteer, id_remap, cross_corpus_map,
-    same_text_map, abstract_map, entity_props.
     ``stop_after`` lets tests kill the run at a stage boundary.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     manifests: dict[str, dict] = {}
 
-    def done(stage: str) -> bool:
-        return resume and stage_is_complete(checkpoint_root, stage)
+    def commit(stage: str, build: Callable[[], DataFrame]) -> DataFrame:
+        if not (resume and stage_is_complete(checkpoint_root, stage)):
+            manifests[stage] = write_stage(
+                build(), checkpoint_root, stage, run_id
+            )
+        return read_stage(spark, checkpoint_root, stage)
 
-    # -- stage: ordered ------------------------------------------------
-    if done("ordered"):
-        ordered = read_stage(spark, checkpoint_root, "ordered")
-    else:
-        ordered = with_section_index(tables["transcripts"])
-        manifests["ordered"] = write_stage(
-            ordered, checkpoint_root, "ordered", run_id
-        )
-        ordered = read_stage(spark, checkpoint_root, "ordered")
-    if stop_after == "ordered":
-        return RunResult(run_id, ordered, manifests)
-
-    # -- stage: mentions -----------------------------------------------
-    if done("mentions"):
-        mentions = read_stage(spark, checkpoint_root, "mentions")
-    else:
-        mentions = extract_mentions(ordered, tables["gazetteer"])
-        manifests["mentions"] = write_stage(
-            mentions, checkpoint_root, "mentions", run_id
-        )
-        mentions = read_stage(spark, checkpoint_root, "mentions")
-    if stop_after == "mentions":
-        return RunResult(run_id, mentions, manifests)
-
-    # -- stage: linked (+ canonical ids) --------------------------------
-    canonical_map = build_canonical_map(
-        tables["id_remap"], tables["cross_corpus_map"], tables["same_text_map"]
-    )
-    if done("linked"):
-        linked = read_stage(spark, checkpoint_root, "linked")
-    else:
-        linked = link_and_canonicalize(
-            mentions, tables["gazetteer"], canonical_map
-        )
-        manifests["linked"] = write_stage(
-            linked, checkpoint_root, "linked", run_id
-        )
-        linked = read_stage(spark, checkpoint_root, "linked")
-    if stop_after == "linked":
-        return RunResult(run_id, linked, manifests)
-
-    # -- stage: triples --------------------------------------------------
-    abstract_lookup = build_abstract_lookup(tables["abstract_map"], canonical_map)
-    if done("triples"):
-        triples = read_stage(spark, checkpoint_root, "triples")
-    else:
-        triples = assemble_triples(
-            ordered,
-            linked,
-            canonical_map,
-            abstract_lookup,
-            tables["entity_props"],
-            salt_buckets=salt_buckets,
-            gazetteer=tables["gazetteer"],
-        )
-        manifests["triples"] = write_stage(
-            triples, checkpoint_root, "triples", run_id
-        )
-        triples = read_stage(spark, checkpoint_root, "triples")
-
-    return RunResult(run_id, triples, manifests)
+    out = _compose(tables, commit, salt_buckets, stop_after)
+    return RunResult(run_id, out, manifests)

@@ -6,30 +6,50 @@ is absent (this sandbox) the fallback writes parquet into a temp dir
 and renames it into place, then writes the manifest LAST — a reader
 treats a stage as committed only when the manifest exists, so partial
 writes are never resumed from. Same contract, either backend.
+
+A commit runs one Spark job, the write. Lineage (rows per output
+partition, per BASELINE north_rule) comes from the written files'
+parquet footers, keyed by the ``part-NNNNN`` index in their names
+(Iceberg: ``record_count`` in the table's ``files`` metadata); the
+manifest also records the schema ``read_stage`` opens the table with.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import shutil
 import time
 import uuid
+from collections import defaultdict
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MANIFEST = "_STAGE_MANIFEST.json"
 
+# the write task's index that leads a data file's name: part-00003-<uuid>
+# .c000.snappy.parquet (parquet), 00003-<task>-<uuid>-00001.parquet (Iceberg)
+_PART_INDEX = re.compile(r"(?:part-)?(\d+)-")
+
+_ICEBERG: dict[str, bool] = {}  # application id -> Iceberg runtime loadable
+
 
 def _has_iceberg(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.spark.source.IcebergSource"
-        )
-        return True
-    except Exception:
-        return False
+    """A py4j class probe, run once per SparkContext."""
+    app = spark.sparkContext.applicationId
+    if app not in _ICEBERG:
+        try:
+            spark._jvm.java.lang.Class.forName(  # noqa: SLF001
+                "org.apache.iceberg.spark.source.IcebergSource"
+            )
+            _ICEBERG[app] = True
+        except Exception:
+            _ICEBERG[app] = False
+    return _ICEBERG[app]
 
 
 def stage_path(root: str, stage: str) -> str:
@@ -56,43 +76,36 @@ def write_stage(
     run_id: str,
     partition_by: list[str] | None = None,
 ) -> dict:
-    """Write a stage table + lineage manifest; returns the manifest.
-
-    Lineage = per-output-partition row counts (spark_partition_id), the
-    per-partition accounting BASELINE north_rule requires. Computed in
-    the same job cache as the write via a cheap second aggregation over
-    the persisted data (reading back parquet footers is metadata-only
-    for counts, but per-partition needs the id column, so we stamp it).
-    """
+    """Write a stage table, then its manifest; returns the manifest."""
     spark = df.sparkSession
     path = stage_path(root, stage)
-    stamped = df.withColumn("_part_id", F.spark_partition_id())
-    tmp = path + f"._tmp_{uuid.uuid4().hex[:8]}"
     t0 = time.time()
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
 
     if _has_iceberg(spark):
         # Production path: Iceberg table, atomic snapshot commit.
-        writer = stamped.write.format("iceberg").mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(path)
-        written = spark.read.format("iceberg").load(path)
+        writer.format("iceberg").save(path)
+        files = [
+            (r["file_path"], r["record_count"])
+            for r in spark.read.format("iceberg").load(path + "#files")
+            .select("file_path", "record_count").collect()
+        ]
     else:
-        writer = stamped.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
+        tmp = path + f"._tmp_{uuid.uuid4().hex[:8]}"
         writer.parquet(tmp)
         if os.path.exists(path):
             shutil.rmtree(path)
         os.replace(tmp, path)
-        written = spark.read.parquet(path)
+        files = [(f, pq.read_metadata(f).num_rows) for f in glob.glob(
+            os.path.join(glob.escape(path), "**", "part-*"), recursive=True)]
 
-    lineage = [
-        {"partition_id": r["_part_id"], "rows": r["rows"]}
-        for r in written.groupBy("_part_id")
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .collect()
-    ]
+    rows: dict[int, int] = defaultdict(int)  # write partition -> rows
+    for f, n in files:
+        if n:  # the one empty file Spark writes for an empty output
+            rows[int(_PART_INDEX.match(os.path.basename(f))[1])] += n
+    lineage = [{"partition_id": p, "rows": n} for p, n in sorted(rows.items())]
     try:  # stage metrics: on-disk footprint (parquet fallback path)
         n_bytes = sum(
             os.path.getsize(os.path.join(dp, fn))
@@ -106,7 +119,8 @@ def write_stage(
         "complete": True,
         "rows": sum(p["rows"] for p in lineage),
         "n_partitions": len(lineage),
-        "partitions": sorted(lineage, key=lambda p: p["partition_id"]),
+        "partitions": lineage,
+        "schema": json.loads(df.schema.json()),
         "metrics": {"write_wall_sec": round(time.time() - t0, 3),
                     "bytes": n_bytes},
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
@@ -117,10 +131,16 @@ def write_stage(
 
 
 def read_stage(spark: SparkSession, root: str, stage: str) -> DataFrame:
+    """The committed table, opened with its manifest's schema: no Spark
+    job. Tables committed before manifests held a schema stored a
+    ``_part_id`` column; one fallback infers their schema and drops it."""
     path = stage_path(root, stage)
     if _has_iceberg(spark):
         try:
             return spark.read.format("iceberg").load(path).drop("_part_id")
         except Exception:
             pass
-    return spark.read.parquet(path).drop("_part_id")
+    schema = (stage_manifest(root, stage) or {}).get("schema")
+    if schema is None:
+        return spark.read.parquet(path).drop("_part_id")
+    return spark.read.schema(T.StructType.fromJson(schema)).parquet(path)

@@ -70,6 +70,8 @@ def down() -> None:
 def run_level(n_exec: int) -> dict:
     from pyspark.sql import SparkSession
 
+    from rkts_migration_spark.session import PERF_CONF
+
     subprocess.run(
         ["zip", "-qr", "/tmp/kg_pkg.zip", "rkts_migration_spark"],
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -84,15 +86,8 @@ def run_level(n_exec: int) -> dict:
         .config("spark.sql.shuffle.partitions", "64")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8MB")
-        # same cache batch size as session.get_spark (measured there)
-        .config("spark.sql.inMemoryColumnarStorage.batchSize", "65536")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # same exclusion as session.get_spark: the inferred Generate
-        # filter triples the extraction-regex evaluations (see there)
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
+        .config(map=PERF_CONF)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
@@ -140,6 +135,8 @@ def run_level(n_exec: int) -> dict:
 def _cluster_session(n_exec: int):
     from pyspark.sql import SparkSession
 
+    from rkts_migration_spark.session import PERF_CONF
+
     subprocess.run(
         ["zip", "-qr", "/tmp/kg_pkg.zip", "rkts_migration_spark"],
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -154,13 +151,8 @@ def _cluster_session(n_exec: int):
         .config("spark.sql.shuffle.partitions", "64")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8MB")
-        # same cache batch size as session.get_spark (measured there)
-        .config("spark.sql.inMemoryColumnarStorage.batchSize", "65536")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
+        .config(map=PERF_CONF)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -65,12 +65,13 @@ def main() -> int:
     # InferFiltersFromGenerate is excluded in the session factory, so
     # the alternation regex is evaluated once per turn, not re-derived
     # as a size()>0 filter below the Generate)
-    from rkts_migration_spark.link import link_and_canonicalize
+    from rkts_migration_spark.link import canonical_winners, link_and_canonicalize
 
     mentions = extract_mentions(ordered, tables["gazetteer"])
     canonical_map = build_canonical_map(
         tables["id_remap"], tables["cross_corpus_map"], tables["same_text_map"])
-    linked = link_and_canonicalize(mentions, tables["gazetteer"], canonical_map)
+    linked = link_and_canonicalize(
+        mentions, canonical_winners(tables["gazetteer"], canonical_map))
     sections.append((
         "Extract + link + canonicalize (fused): ONE broadcast join on the big side",
         "regexp_extract_all in codegen, evaluated once per turn (no inferred "

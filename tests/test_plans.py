@@ -157,12 +157,16 @@ def test_session_perf_contract(spark):
     64Ki columnar-cache batch size (the 10k default pays per-batch
     setup O(rows/batchSize) per column per consumer on the two
     corpus-sized persisted intermediates; -11-14% flagship measured).
-    A silent revert of either would ship a measured regression."""
-    assert "InferFiltersFromGenerate" in spark.conf.get(
+    A silent revert of either would ship a measured regression.
+    session.PERF_CONF is the one copy every session builder applies."""
+    from rkts_migration_spark.session import PERF_CONF
+
+    assert "InferFiltersFromGenerate" in PERF_CONF[
         "spark.sql.optimizer.excludedRules"
-    )
-    assert spark.conf.get(
-        "spark.sql.inMemoryColumnarStorage.batchSize") == "65536"
+    ]
+    assert PERF_CONF["spark.sql.inMemoryColumnarStorage.batchSize"] == "65536"
+    for key, value in PERF_CONF.items():
+        assert spark.conf.get(key) == value, key
     # compression must stay ON: disabling it measured SLOWER
     # end-to-end (bigger cache -> more bus bytes per downstream read)
     assert spark.conf.get(
