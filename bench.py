@@ -18,6 +18,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.host import steal_cs  # noqa: E402
+
 
 def _time_count(df_thunk) -> tuple[float, int]:
     """Times plan construction + execution (build_triples_inmem
@@ -25,17 +27,6 @@ def _time_count(df_thunk) -> tuple[float, int]:
     t0 = time.time()
     n = df_thunk().count()
     return time.time() - t0, n
-
-
-def _steal_cs() -> int:
-    """Cumulative hypervisor-steal centiseconds (/proc/stat cpu line,
-    8th field): nonzero growth during a trial means the shared host
-    ran other tenants inside the measured region."""
-    try:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-    except (OSError, IndexError, ValueError):
-        return 0
 
 
 def _cotenant_jvms() -> int:
@@ -128,9 +119,9 @@ def main() -> int:
     kg_steals = []
 
     def one_trial():
-        s0 = _steal_cs()
+        s0 = steal_cs()
         sec, n = _time_count(kg_build)
-        kg_steals.append(_steal_cs() - s0)
+        kg_steals.append(steal_cs() - s0)
         kg_walls.append(round(sec, 3))
         return n
 
@@ -164,9 +155,9 @@ def main() -> int:
         walls = []
         steals = []
         for _ in range(2):
-            s0 = _steal_cs()
+            s0 = steal_cs()
             walls.append(_time_count(lambda: qs[name](spark, sf_dir))[0])
-            steals.append(_steal_cs() - s0)
+            steals.append(steal_cs() - s0)
         timings[name] = round(min(walls), 3)
         q_steals[name] = steals
 

@@ -11,7 +11,7 @@ Layout
 - :mod:`rkts_migration_spark.fixtures`     deterministic synthetic inputs
 - :mod:`rkts_migration_spark.oracle`       single-node golden oracle (pure python)
 - :mod:`rkts_migration_spark.functions`    scalar column expressions + pandas UDFs
-- :mod:`rkts_migration_spark.operators`    window/dedup/CC/salting/similarity ops
+- :mod:`rkts_migration_spark.operators`    window/dedup/CC/similarity ops
 - :mod:`rkts_migration_spark.extract`      trie mention detection (mapInPandas)
 - :mod:`rkts_migration_spark.link`         gazetteer-scored entity linking
 - :mod:`rkts_migration_spark.canonicalize` dictionary merges + connected components

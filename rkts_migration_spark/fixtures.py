@@ -153,7 +153,7 @@ def make_dictionaries(rng: random.Random, n_entities: int = 60) -> dict[str, lis
 
 def _zipf_sizes(rng: random.Random, n_convs: int, s: float = 1.3,
                 min_turns: int = 2, max_turns: int = 120) -> list[int]:
-    """Deliberately skewed per-conversation turn counts (exercises salting)."""
+    """Deliberately skewed per-conversation turn counts."""
     sizes = []
     for i in range(n_convs):
         # rank-based zipf: conv 0 is the hot key

@@ -33,7 +33,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--stop-after", default=None,
                     choices=["ordered", "mentions", "linked"],
                     help="stop at a stage boundary (kill-and-resume testing)")
-    ap.add_argument("--salt-buckets", type=int, default=16)
     ap.add_argument("--shuffle-partitions", type=int, default=None,
                     help="spark.sql.shuffle.partitions override; default: "
                          "session-factory heuristic (cores when local, 200 "
@@ -67,7 +66,6 @@ def main(argv: list[str] | None = None) -> int:
         checkpoint_root=args.checkpoint,
         run_id=args.run_id,
         resume=not args.no_resume,
-        salt_buckets=args.salt_buckets,
         stop_after=args.stop_after,
     )
     n_out = res.triples.count()

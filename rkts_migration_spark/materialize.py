@@ -12,8 +12,9 @@ Plan shape (scale rationale):
 - Section triples reuse the conv-partitioned window shuffle computed by
   the ordered stage (explode-shaped: the bounds are derived by a
   window pass that a union would re-run per predicate).
-- topEntity uses the salted two-phase count (operators/salt.py) because
-  conversation sizes are Zipf-skewed.
+- topEntity counts with a plain groupBy: its map-side partial_count
+  sends at most one row per (conv_id, canon_id) per task to the
+  shuffle, so a hot conversation stays bounded without salting.
 - Label pref/alt uses order-aware first-wins windows (operators/dedup.py),
   the distributed analog of seenTitles/seenLangs
   (/root/reference/kernelxmltottl.php:88-89,205-227).
@@ -36,7 +37,6 @@ from .functions.ids import (
 )
 from .functions.text import norm_label_col, str_lit_col
 from .operators.dedup import with_first_flag
-from .operators.salt import salted_count
 from .operators.sections import section_bounds
 
 TRIPLE_COLS = ("subj", "pred", "obj")
@@ -178,16 +178,14 @@ def mention_triples(linked_canon: DataFrame, entity_iri_map: DataFrame) -> DataF
 
 
 def top_entity_triples(
-    linked_canon: DataFrame, entity_iri_map: DataFrame, salt_buckets: int = 16
+    linked_canon: DataFrame, entity_iri_map: DataFrame
 ) -> DataFrame:
     """(conv, topEntity, entity): max mention count per conversation,
-    ties -> numeric-min canonical id. Two-phase salted count because
-    conv sizes are Zipf-skewed."""
-    counts = salted_count(
-        linked_canon,
-        keys=["conv_id", "canon_id"],
-        salt_from=["turn_idx", "midx"],
-        buckets=salt_buckets,
+    ties -> numeric-min canonical id. Two exchanges: the count's map-side
+    partial_count reduces each task's split of a hot conversation to one
+    row per (conv_id, canon_id) before its shuffle, then the argmin."""
+    counts = linked_canon.groupBy("conv_id", "canon_id").agg(
+        F.count(F.lit(1)).alias("cnt")
     )
     top = (
         counts.withColumn("_pad", pad_id_col(F.col("canon_id")))
@@ -288,7 +286,6 @@ def assemble_triples(
     canonical_map: DataFrame,
     entity_iri_map: DataFrame,
     entity_props: DataFrame,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Union of every family — the global-graph union (U1 analog,
     /root/reference/utils.php:833-840). ``entity_iri_map`` is
@@ -306,7 +303,7 @@ def assemble_triples(
         conv_triples(turns_with_section),
         section_triples(turns_with_section),
         mention_triples(linked_canon, entity_iri_map),
-        top_entity_triples(linked_canon, entity_iri_map, salt_buckets),
+        top_entity_triples(linked_canon, entity_iri_map),
         label_triples(linked_canon, entity_iri_map),
         entity_prop_triples(
             entity_props, canonical_map, entity_iri_map, mentioned

@@ -1,7 +1,8 @@
 """Cached-dependency tracking for lazily-returned DataFrames.
 
-Several dedup/ANN operators persist an intermediate table (postings,
-band buckets, projected vectors) that the RETURNED DataFrame's plan
+Several dedup/ANN operators and the in-memory pipeline persist an
+intermediate table (postings, band buckets, projected vectors, the
+ordered and linked stages) that the RETURNED DataFrame's plan
 references multiple times — the persist is load-bearing (Spark has no
 cross-DAG subtree reuse), but the operator can't unpersist it before
 the caller's consuming action has run. Without cleanup, a long-lived

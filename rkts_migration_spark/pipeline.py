@@ -10,7 +10,8 @@ each built from the ones before it and passed through a boundary, the
 one thing the two forms differ in:
 
 - build_triples_inmem persists: ``ordered`` and ``linked``, which feed
-  several later stages or triple families, are cached and materialized.
+  several later stages or triple families, are cached and materialized,
+  and attached to the returned triples for the caller to release.
 - run_pipeline commits: each stage is written as a stage table plus
   manifest (sources/tables.py), and later stages read the committed
   table back, schema known, with no Spark job. A re-run with the same
@@ -40,6 +41,7 @@ from .canonicalize import build_abstract_lookup, build_canonical_map
 from .extract import _normalized_surfaces, extract_mentions
 from .link import canonical_winners, link_and_canonicalize
 from .materialize import assemble_triples, build_entity_iri_map
+from .operators.caching import attach_cached_deps
 from .operators.sections import with_section_index
 from .sources.tables import read_stage, stage_is_complete, write_stage
 
@@ -82,7 +84,6 @@ def _build_dictionaries(tables: dict[str, DataFrame]) -> _Dictionaries:
 def _compose(
     tables: dict[str, DataFrame],
     boundary: Callable[[str, Callable[[], DataFrame]], DataFrame],
-    salt_buckets: int = 16,
     stop_after: str | None = None,
 ) -> DataFrame:
     """Run the stages in order; ``boundary(stage, build)`` returns the
@@ -104,7 +105,6 @@ def _compose(
             "triples": lambda: assemble_triples(
                 done["ordered"], done["linked"], pending.result().canonical_map,
                 pending.result().entity_iri_map, tables["entity_props"],
-                salt_buckets=salt_buckets,
             ),
         }
         for stage in STAGES:
@@ -116,7 +116,7 @@ def _compose(
 
 
 def build_triples_inmem(
-    spark: SparkSession, tables: dict[str, DataFrame], salt_buckets: int = 16
+    spark: SparkSession, tables: dict[str, DataFrame]
 ) -> DataFrame:
     """The pipeline with no checkpoint IO (driver contract, bench and
     streaming; production runs use run_pipeline for resumability).
@@ -125,8 +125,10 @@ def build_triples_inmem(
     plan branches that AQE submits CONCURRENTLY; left lazy, their tasks
     race to build the same cache partitions and block on the cache lock
     while holding task slots (observed: 4 duplicate 64-task stages
-    spanning the whole extraction phase). When a later stage raises,
-    the caches are released."""
+    spanning the whole extraction phase). The caches are attached to
+    the returned triples (operators/caching.attach_cached_deps): the
+    caller releases them with release_cached_deps after its last action
+    on the triples. When a later stage raises, they are released here."""
     held: list[DataFrame] = []
 
     def persist(stage: str, build: Callable[[], DataFrame]) -> DataFrame:
@@ -137,7 +139,7 @@ def build_triples_inmem(
         return df
 
     try:
-        return _compose(tables, persist, salt_buckets)
+        return attach_cached_deps(_compose(tables, persist), held)
     except BaseException:
         for df in held:
             df.unpersist()
@@ -157,7 +159,6 @@ def run_pipeline(
     checkpoint_root: str,
     run_id: str | None = None,
     resume: bool = True,
-    salt_buckets: int = 16,
     stop_after: str | None = None,
 ) -> RunResult:
     """Run (or resume) the full pipeline; returns the triples DataFrame
@@ -175,5 +176,5 @@ def run_pipeline(
             )
         return read_stage(spark, checkpoint_root, stage)
 
-    out = _compose(tables, commit, salt_buckets, stop_after)
+    out = _compose(tables, commit, stop_after)
     return RunResult(run_id, out, manifests)

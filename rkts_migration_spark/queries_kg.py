@@ -277,8 +277,9 @@ SELECT '{V.CONV}' || conv_id AS subj, '{V.PRED_TOP_ENTITY}' AS pred,
 FROM top WHERE rn = 1
 """)
 def q_kg_top_entity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """topEntity family (salted two-phase count, max count with
-    numeric-min tie-break), SQL-checked (single-token gazetteer)."""
+    """topEntity family (plain count with map-side partial aggregation,
+    max count with numeric-min tie-break), SQL-checked (single-token
+    gazetteer)."""
     from .materialize import top_entity_triples
 
     linked, iri_map = _kg_linked_1tok(spark, sf_dir)

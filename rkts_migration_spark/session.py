@@ -2,7 +2,8 @@
 
 Local-mode defaults follow the public Spark tuning guidance: shuffle
 partitions sized to cores (not the 200 default), AQE on (runtime
-coalescing + skew-join backstop on top of our explicit salting), Arrow
+coalescing + skew-join backstop; per-key counts need neither, since
+map-side partial aggregation already bounds a hot key), Arrow
 enabled for every pandas-UDF boundary.
 """
 
@@ -34,11 +35,14 @@ PERF_CONF = {
     # consumer. 65,536 measured: linked cache build -19%, full flagship
     # -11% at local[8] and -14% at local[8] on the 8x scaling input, a
     # wash at local[2] (narrow runs are bandwidth-slack, not
-    # overhead-bound). Memory stays bounded: one batch buffers 64Ki rows
-    # x bytes/column per task (~10-15 MB for our widest text column)
-    # and compression stays ON — unlike disabling compression, which
-    # measured SLOWER end-to-end (bigger cache -> more bytes through the
-    # bus on every downstream read).
+    # overhead-bound). Memory stays bounded, but per task: one batch
+    # buffers 64Ki rows x bytes/column (~10-15 MB for our widest text
+    # column) for each column of each concurrently running cache-build
+    # task, so an executor holds up to cores x cached columns x that —
+    # the multiplier to check on small executors (few GB, 2 cores) or
+    # wider text columns. Compression stays ON — unlike disabling
+    # compression, which measured SLOWER end-to-end (bigger cache ->
+    # more bytes through the bus on every downstream read).
     "spark.sql.inMemoryColumnarStorage.batchSize": "65536",
 }
 

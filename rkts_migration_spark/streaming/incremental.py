@@ -20,6 +20,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.caching import release_cached_deps
 from ..pipeline import build_triples_inmem
 
 
@@ -35,7 +36,9 @@ def stream_triples(
     ``dict_tables``: gazetteer/id_remap/cross_corpus_map/same_text_map/
     abstract_map/entity_props (static side inputs, broadcast each batch).
     ``sink(batch_triples_df, batch_id)`` commits each micro-batch —
-    append an Iceberg snapshot in production.
+    append an Iceberg snapshot in production. The batch's pipeline
+    caches are released once the sink returns: an action on the frame
+    after that recomputes it.
     """
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -43,6 +46,7 @@ def stream_triples(
         tables["transcripts"] = batch_df
         triples = build_triples_inmem(batch_df.sparkSession, tables)
         sink(triples, batch_id)
+        release_cached_deps(triples)
 
     writer = (
         transcript_stream.writeStream.foreachBatch(per_batch)
@@ -260,6 +264,7 @@ def stream_kg_ingest(
             delta.select(cols).write.mode("append").parquet(store_dir)
         delta.unpersist()
         inc.unpersist()
+        release_cached_deps(candidates)
         _fs_write_json(
             spark,
             f"{store_dir}/_INGEST_MANIFESTS/"

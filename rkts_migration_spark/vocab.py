@@ -56,7 +56,7 @@ PLACEHOLDERS = ("", "-")
 # Per conversation c:
 #   (conv_iri, nTurns,    int_lit(n_turns))
 #   (conv_iri, topEntity, entity_iri)  entity with max mention count in c,
-#                                      ties -> min canonical id (salted agg)
+#                                      ties -> numeric-min canonical id
 #
 # Per section island s (maximal run of equal role, 1-based ordinal k):
 #   (conv_iri, hasSection,   sec_iri)

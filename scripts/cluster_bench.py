@@ -25,6 +25,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.host import steal_cs  # noqa: E402
+
 MASTER_URL = "spark://127.0.0.1:7077"
 CORES_PER_EXEC = 2
 TRIALS = int(os.environ.get("CLUSTER_TRIALS", "4"))
@@ -108,21 +110,15 @@ def run_level(n_exec: int) -> dict:
         t["transcripts"] = spark.read.parquet(input_dir)
         return build_triples_inmem(spark, t)
 
-    def _steal_cs() -> int:
-        # /proc/stat cumulative hypervisor-steal centiseconds: per-trial
-        # interference evidence (same sampling as scripts/scaling_bench.py)
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-
     build().count()  # warm-up (JIT per executor JVM)
     walls, steals, n = [], [], 0
     for _ in range(TRIALS):
         spark.catalog.clearCache()
-        s0 = _steal_cs()
+        s0 = steal_cs()
         t0 = time.time()
         n = build().count()
         walls.append(round(time.time() - t0, 3))
-        steals.append(_steal_cs() - s0)
+        steals.append(steal_cs() - s0)
     spark.stop()
     wall = min(walls)
     return {"executors": n_exec, "cores_per_executor": CORES_PER_EXEC,
@@ -182,10 +178,6 @@ def bench_headliners(n_exec: int) -> int:
     input_dir = _prepare_input(spark, sf_dir)
     dict_tables = fixtures_to_spark(spark, make_fixtures(seed=42, n_convs=1))
 
-    def _steal() -> int:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-
     def kg_build():
         t = dict(dict_tables)
         t["transcripts"] = spark.read.parquet(input_dir)
@@ -207,11 +199,11 @@ def bench_headliners(n_exec: int) -> int:
         for _ in range(3 if name == "kg_pipeline" else 2):
             if name == "kg_pipeline":
                 spark.catalog.clearCache()
-            s0 = _steal()
+            s0 = steal_cs()
             t0 = _t.time()
             thunk().count()
             walls.append(round(_t.time() - t0, 3))
-            steals.append(_steal() - s0)
+            steals.append(steal_cs() - s0)
         timings[name] = {"wall_sec": min(walls), "all_walls": walls,
                          "all_steal_cs": steals}
     spark.stop()

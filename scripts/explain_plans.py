@@ -1,8 +1,9 @@
 """Dump formatted physical plans of the pipeline's key shapes to
 PLANS.md — the artifacts behind tests/test_plans.py's assertions:
 scan pushdown + schema pruning, broadcast dictionary joins, the single
-conv-partitioned exchange shared by every window, and the Python
-boundary confined to one mapInPandas stage.
+conv-partitioned exchange shared by every window, the topEntity count's
+partial aggregation, and the Python boundary confined to one
+mapInPandas stage.
 
 Usage: python scripts/explain_plans.py
 """
@@ -29,10 +30,8 @@ def main() -> int:
 
     from rkts_migration_spark.extract import extract_mentions_trie
     from rkts_migration_spark.fixtures import fixtures_to_spark, make_fixtures
-    from rkts_migration_spark.canonicalize import build_canonical_map
     from rkts_migration_spark.extract import extract_mentions
-    from rkts_migration_spark.materialize import mention_triples, build_entity_iri_map
-    from rkts_migration_spark.canonicalize import build_abstract_lookup
+    from rkts_migration_spark.materialize import mention_triples
     from rkts_migration_spark.operators.sections import with_section_index
     from rkts_migration_spark.session import get_spark
 
@@ -65,13 +64,14 @@ def main() -> int:
     # InferFiltersFromGenerate is excluded in the session factory, so
     # the alternation regex is evaluated once per turn, not re-derived
     # as a size()>0 filter below the Generate)
-    from rkts_migration_spark.link import canonical_winners, link_and_canonicalize
+    # The dictionary tables are the pipeline's own: JVM-local relations
+    # (LocalTableScan), as both pipeline forms build them.
+    from rkts_migration_spark.link import link_and_canonicalize
+    from rkts_migration_spark.pipeline import _build_dictionaries
 
-    mentions = extract_mentions(ordered, tables["gazetteer"])
-    canonical_map = build_canonical_map(
-        tables["id_remap"], tables["cross_corpus_map"], tables["same_text_map"])
-    linked = link_and_canonicalize(
-        mentions, canonical_winners(tables["gazetteer"], canonical_map))
+    dicts = _build_dictionaries(tables)
+    mentions = extract_mentions(ordered, tables["gazetteer"], dicts.surfaces)
+    linked = link_and_canonicalize(mentions, dicts.winners)
     sections.append((
         "Extract + link + canonicalize (fused): ONE broadcast join on the big side",
         "regexp_extract_all in codegen, evaluated once per turn (no inferred "
@@ -82,8 +82,7 @@ def main() -> int:
     ))
 
     # 4. mention triples: distinct narrow cols, then broadcast IRI map
-    abstract_lookup = build_abstract_lookup(tables["abstract_map"], canonical_map)
-    iri_map = build_entity_iri_map(tables["gazetteer"], canonical_map, abstract_lookup)
+    iri_map = dicts.entity_iri_map
     mt = mention_triples(linked, iri_map)
     sections.append((
         "Mention triples: distinct before string rendering",
@@ -101,6 +100,19 @@ def main() -> int:
         "tiny (entities x labels) shuffle — the straggler-free form of "
         "first-wins dedup",
         plan_of(lt),
+    ))
+
+    # 4c. topEntity family: plain count, partial aggregation absorbs a
+    # hot conversation before the shuffle
+    from rkts_migration_spark.materialize import top_entity_triples
+    sections.append((
+        "topEntity triples: partial count, two exchanges",
+        "groupBy(conv_id, canon_id) count with map-side partial_count, so a "
+        "hot conversation reaches the (conv_id, canon_id) exchange as at most "
+        "one row per key per task; then the argmin-struct (max count, "
+        "numeric-min id) per conversation behind a second exchange; the "
+        "entity IRI joins by broadcast",
+        plan_of(top_entity_triples(linked, iri_map)),
     ))
 
     # 5. trie path: the only Python boundary

@@ -39,6 +39,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.host import steal_cs  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 N_BATCHES = 4
@@ -253,20 +255,14 @@ def main() -> int:
              fixtures_to_spark(spark, make_fixtures(seed=42, n_convs=1)).items()
              if k != "transcripts"}
 
-    def _steal_cs() -> int:
-        # per-batch /proc/stat steal delta: same self-diagnosis as
-        # bench.py / scaling_bench.py — a polluted batch wall carries
-        # its own receipt
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-
+    # per-batch steal delta: a polluted batch wall carries its own receipt
     batches: list[dict] = []
     last = [time.monotonic()]
-    last_steal = [_steal_cs()]
+    last_steal = [steal_cs()]
 
     def on_batch(bid: int, n: int) -> None:
         now = time.monotonic()
-        s = _steal_cs()
+        s = steal_cs()
         batches.append({"batch": bid, "appended": n,
                         "wall_sec": round(now - last[0], 3),
                         "steal_cs": s - last_steal[0]})

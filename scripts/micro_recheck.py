@@ -26,6 +26,8 @@ import time
 
 sys.path.insert(0, ".")
 
+from perfbench.host import steal_cs  # noqa: E402
+
 TRIALS = 7
 QUERIES = [
     "q_simhash",
@@ -35,12 +37,6 @@ QUERIES = [
     "q_token_stats",
     "q_nt_lines",
 ]
-
-
-def _steal_cs() -> int:
-    # /proc/stat "cpu" line, 8th value = cumulative steal centiseconds
-    with open("/proc/stat") as f:
-        return int(f.readline().split()[8])
 
 
 def _plan_fingerprint(df) -> str:
@@ -89,12 +85,12 @@ def main() -> int:
         fp = None
         for _ in range(TRIALS):
             spark.catalog.clearCache()
-            s0 = _steal_cs()
+            s0 = steal_cs()
             t0 = time.time()
             df = qs[name](spark, sf_dir)
             df.count()
             walls.append(round(time.time() - t0, 3))
-            steals.append(_steal_cs() - s0)
+            steals.append(steal_cs() - s0)
             if fp is None:
                 fp = _plan_fingerprint(df)
         best = min(walls)

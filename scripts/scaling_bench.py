@@ -20,6 +20,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.host import steal_cs  # noqa: E402
+
 SHUFFLE_PARTITIONS = 64
 # Default N=2 -> 4N=8 on this 32-core box: the single-machine proxy
 # shares ONE memory controller across every parallelism level, so a
@@ -98,13 +100,6 @@ def run_one(cores: int) -> dict:
     # pipeline (extraction included), not cached intermediates
     build().count()
 
-    def _steal_cs() -> int:
-        # /proc/stat "cpu" line, 8th value = cumulative centiseconds
-        # the hypervisor ran OTHER tenants while this VM had runnable
-        # work — direct evidence of host interference during a trial
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-
     walls = []
     steals = []
     n = 0
@@ -112,11 +107,11 @@ def run_one(cores: int) -> dict:
         spark.catalog.clearCache()
         # build() eagerly materializes the stage caches, so it is part
         # of the measured region — t0 comes first
-        s0 = _steal_cs()
+        s0 = steal_cs()
         t0 = time.time()
         n = build().count()
         walls.append(time.time() - t0)
-        steals.append(_steal_cs() - s0)
+        steals.append(steal_cs() - s0)
     wall = min(walls)
     spark.stop()
     return {"cores": cores, "triples": n, "wall_sec": round(wall, 3),

@@ -296,6 +296,51 @@ def test_stream_matches_batch(spark, tmpdir_ckpt):
     assert got == batch_triples
 
 
+@pytest.mark.parametrize("form", ["stream_triples", "stream_kg_ingest"])
+def test_stream_releases_batch_caches(spark, tmpdir_ckpt, form):
+    """Each micro-batch's in-memory pipeline caches (ordered, linked)
+    are released once its sink or append has run: over five file
+    micro-batches the persisted-RDD count ends where it began."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from rkts_migration_spark.fixtures import (
+        TRANSCRIPT_DDL,
+        fixtures_to_spark,
+        make_fixtures,
+    )
+    from rkts_migration_spark.streaming import (
+        stream_from_directory,
+        stream_kg_ingest,
+        stream_triples,
+    )
+
+    tables = fixtures_to_spark(spark, make_fixtures(seed=5, n_convs=10))
+    tr = tables.pop("transcripts")
+    src = os.path.join(tmpdir_ckpt, "src")
+    for k in range(5):
+        (tr.filter(F.col("conv_id").isin([f"C{2 * k:06d}", f"C{2 * k + 1:06d}"]))
+         .coalesce(1).write.mode("append").parquet(src))
+    stream = stream_from_directory(spark, src, TRANSCRIPT_DDL)
+    ck = os.path.join(tmpdir_ckpt, "ck")
+    batches: list[int] = []
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    if form == "stream_triples":
+        q = stream_triples(stream, tables,
+                           lambda df, bid: batches.append(df.count()), ck)
+    else:
+        q = stream_kg_ingest(stream, tables, os.path.join(tmpdir_ckpt, "store"),
+                             ck, on_batch=lambda bid, n: batches.append(n))
+    q.awaitTermination(300)
+    assert len(batches) == 5 and all(n > 0 for n in batches)
+    assert persisted() == before
+
+
 def test_stream_kg_ingest_idempotent_delta(spark, tmpdir_ckpt):
     """Continuous KG construction: three file drops (convs A, convs B,
     then an exact RE-DELIVERY of A), maxFilesPerTrigger=1 => three

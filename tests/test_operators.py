@@ -1,4 +1,4 @@
-"""Operator-family tests: sections, CC, salting, first-wins dedup,
+"""Operator-family tests: sections, CC, first-wins dedup,
 trie extraction vs the oracle's regex scanner."""
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ from rkts_migration_spark.extract import TokenTrie
 from rkts_migration_spark.oracle import _compile_surface_regex, detect_mentions
 from rkts_migration_spark.operators.cc import connected_components
 from rkts_migration_spark.operators.dedup import exact_dedup, first_wins
-from rkts_migration_spark.operators.salt import salted_count
 from rkts_migration_spark.operators.sections import section_bounds, with_section_index
 
 
@@ -46,22 +45,6 @@ def test_connected_components_chains_and_cycles(spark):
     assert got["E0003"] == got["E0004"] == got["E0006"] == "E0003"
     assert got["E0011"] == got["E0012"] == "E0011"
     assert got["E0030"] == got["E0031"] == "E0030"
-
-
-def test_salted_count_equals_plain_count(spark):
-    df = spark.createDataFrame(
-        [("k1", i) for i in range(100)] + [("k2", i) for i in range(7)],
-        "key string, v int",
-    )
-    salted = {
-        r["key"]: r["cnt"]
-        for r in salted_count(df, ["key"], salt_from=["v"], buckets=8).collect()
-    }
-    plain = {
-        r["key"]: r["cnt"]
-        for r in df.groupBy("key").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    assert salted == plain == {"k1": 100, "k2": 7}
 
 
 def test_first_wins_is_order_aware(spark):
@@ -313,6 +296,19 @@ def test_connected_components_deep_chain(spark):
            for r in connected_components(edges, max_iter=15).collect()}
     assert len(got) == depth + 1
     assert set(got.values()) == {"E00000"}
+
+
+def test_connected_components_fails_loudly_at_max_iter(spark):
+    # a 16-deep chain needs several rounds even with pointer jumps:
+    # one round must raise, naming the cap, not return partial labels
+    import pytest
+
+    edges = spark.createDataFrame(
+        [(f"E{i:05d}", f"E{i + 1:05d}") for i in range(16)],
+        "src string, dst string",
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edges, max_iter=1)
 
 
 def test_tree_paths_constant_plan_and_max_iter_guard(spark):

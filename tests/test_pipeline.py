@@ -185,6 +185,45 @@ def test_flagship_documents_path_matches_oracle(spark):
     assert p == 1.0 and r == 1.0 and len(got) > 1000
 
 
+def test_top_entity_planted_skew_matches_oracle(spark):
+    """One conversation holds >= 30% of all mentions, split evenly
+    between E2 and E10: the topEntity rows (the only family with that
+    predicate) must equal the oracle's, the hot conversation's tie
+    broken by numeric-min id — E2, where a string min picks E10."""
+    from datetime import datetime, timedelta
+
+    from rkts_migration_spark import vocab as V
+    from rkts_migration_spark.oracle import _compile_surface_regex, detect_mentions
+    from rkts_migration_spark.operators.caching import release_cached_deps
+    from rkts_migration_spark.pipeline import build_triples_inmem
+
+    fx = make_fixtures(seed=42, n_convs=20)
+    hot = "C999999"
+    fx.transcripts += [
+        {"conv_id": hot, "turn_idx": i, "role": "user",
+         "text": "spark sql and table scan",  # E2's and E10's surfaces
+         "tool": None, "ts": datetime(2026, 1, 1) + timedelta(minutes=i)}
+        for i in range(300)
+    ]
+    rx = _compile_surface_regex([g["surface"] for g in fx.gazetteer])
+    per_conv = Counter()
+    for t in fx.transcripts:
+        if t["text"] not in V.PLACEHOLDERS:
+            per_conv[t["conv_id"]] += len(detect_mentions(t["text"], rx))
+    assert per_conv[hot] >= 0.3 * sum(per_conv.values())
+
+    def top_entity(triples):
+        return {t for t in triples if t[1] == V.PRED_TOP_ENTITY}
+
+    want = top_entity(run_oracle(fx))
+    assert (V.conv_iri(hot), V.PRED_TOP_ENTITY, V.entity_iri("E2", None)) in want
+    triples = build_triples_inmem(spark, fixtures_to_spark(spark, fx))
+    try:
+        assert top_entity(_collect_triples(triples)) == want
+    finally:
+        release_cached_deps(triples)
+
+
 def test_pipeline_trie_path_matches_oracle(spark, fx, oracle_triples, monkeypatch):
     """Force the mapInPandas Aho-Corasick path (the north-star scale
     strategy) through the FULL pipeline: with the regex threshold at 0

@@ -78,6 +78,27 @@ def test_jaccard_guard_partial_agg_no_window(spark):
     assert jaccard_pairs(docs, max_df=3, threshold_pct=80).count() == 0
 
 
+def test_top_entity_partial_count_two_exchanges(spark):
+    """topEntity counts per (conv_id, canon_id) with a plain groupBy:
+    map-side partial_count reduces each task's split of a hot
+    conversation to one row per key before the shuffle. Two hash
+    exchanges (the count, then the argmin per conversation), no salt."""
+    from rkts_migration_spark.materialize import top_entity_triples
+
+    linked = spark.createDataFrame(
+        [("c0", i, 0, "E2" if i % 3 else "E10") for i in range(30)]
+        + [("c1", 0, 0, "E10")],
+        "conv_id string, turn_idx int, midx int, canon_id string",
+    )
+    iri = spark.createDataFrame(
+        [("E2", "e:E2"), ("E10", "e:E10")], "canon_id string, entity_iri string")
+    out = top_entity_triples(linked, iri)
+    plan = physical_plan(out, mode="simple")
+    assert count_exchanges(out) == 2, plan
+    assert "partial_count" in plan, plan
+    assert "_salt" not in plan, plan
+
+
 def test_mention_join_is_broadcast(spark):
     """Linking joins the mention stream against the tiny winners dim —
     must broadcast, never shuffle the stream."""
