@@ -9,7 +9,8 @@ Launch (BASELINE.md launch-mode contract):
 
 With no ``--input`` the deterministic synthetic fixture transcripts
 (fixtures.py, seed/scale flags) are generated — no external data.
-Prints one JSON summary line: rows in/out, triples/sec, stage lineage.
+Prints one JSON summary line: rows in/out, triples/sec, stage lineage,
+and the pipeline window's Janino compiles.
 """
 
 from __future__ import annotations
@@ -46,7 +47,7 @@ def main(argv: list[str] | None = None) -> int:
     # imports deferred so --help works without a JVM
     from rkts_migration_spark.fixtures import fixtures_to_spark, make_fixtures
     from rkts_migration_spark.pipeline import run_pipeline
-    from rkts_migration_spark.session import get_spark
+    from rkts_migration_spark.session import codegen_counters, get_spark
 
     spark = get_spark(
         app_name="kg-construct-job",
@@ -60,6 +61,7 @@ def main(argv: list[str] | None = None) -> int:
         tables["transcripts"] = spark.read.parquet(args.input)
 
     t0 = time.time()
+    cg0 = codegen_counters(spark)
     res = run_pipeline(
         spark,
         tables,
@@ -73,6 +75,7 @@ def main(argv: list[str] | None = None) -> int:
     # optional NT text sink below are reported separately so wall_sec /
     # rows_per_sec stay comparable across runs and flag settings
     wall = time.time() - t0
+    cg1 = codegen_counters(spark)
     # input-order audit (report_error analog, kept as data): turn_idx
     # must be 0..n-1 contiguous per conversation
     from rkts_migration_spark.operators.ordering import assert_contiguous
@@ -105,6 +108,10 @@ def main(argv: list[str] | None = None) -> int:
         "rows_per_sec": round(n_out / wall, 1) if wall > 0 else None,
         "audit_sec": round(audit_sec, 3),
         "nt_sink_sec": nt_sec,
+        # Janino compiles in the pipeline window: near the run's distinct
+        # generated classes when the codegen cache holds them all
+        "codegen": {"compiles": cg1["compiles"] - cg0["compiles"],
+                    "compile_s": round(cg1["compile_s"] - cg0["compile_s"], 3)},
         "stages_committed": {
             k: {"rows": m["rows"], "n_partitions": m["n_partitions"],
                 **m["metrics"]}

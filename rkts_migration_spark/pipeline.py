@@ -25,11 +25,14 @@ background thread overlapped with the ``ordered`` boundary, as
 JVM-local relations (``createDataFrame`` of an Arrow table, planned as
 ``LocalRelation``). Every join with them is a forced broadcast, so they
 are bounded by driver memory already; local, they run no dictionary
-job inside a per-row stage and fork no Python worker.
+job inside a per-row stage and fork no Python worker. A stream, whose
+dictionary tables never change, hands every micro-batch one
+``dictionaries_once`` build: the first batch runs it, the rest reuse it.
 """
 
 from __future__ import annotations
 
+import functools
 import uuid
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
@@ -81,19 +84,32 @@ def _build_dictionaries(tables: dict[str, DataFrame]) -> _Dictionaries:
     )
 
 
+def dictionaries_once(
+    tables: dict[str, DataFrame],
+) -> Callable[[], _Dictionaries]:
+    """A build of the dictionary tables that runs on its first call and
+    returns that result on every later one: pass it as
+    ``build_triples_inmem(..., dictionaries=)`` to runs whose dictionary
+    tables are the same, such as the micro-batches of one stream."""
+    return functools.cache(functools.partial(_build_dictionaries, tables))
+
+
 def _compose(
     tables: dict[str, DataFrame],
     boundary: Callable[[str, Callable[[], DataFrame]], DataFrame],
     stop_after: str | None = None,
+    dictionaries: Callable[[], _Dictionaries] | None = None,
 ) -> DataFrame:
     """Run the stages in order; ``boundary(stage, build)`` returns the
     frame later stages read. Returns the last stage run (``stop_after``,
     else ``triples``). ``tables`` needs: transcripts, gazetteer,
     id_remap, cross_corpus_map, same_text_map, abstract_map,
-    entity_props."""
+    entity_props. ``dictionaries`` builds (or returns) the dictionary
+    tables, on the background thread; default: built from ``tables``."""
     done: dict[str, DataFrame] = {}
     with ThreadPoolExecutor(1) as pool:
-        pending = pool.submit(_build_dictionaries, tables)
+        pending = pool.submit(
+            dictionaries or functools.partial(_build_dictionaries, tables))
         builds = {
             "ordered": lambda: with_section_index(tables["transcripts"]),
             "mentions": lambda: extract_mentions(
@@ -116,7 +132,9 @@ def _compose(
 
 
 def build_triples_inmem(
-    spark: SparkSession, tables: dict[str, DataFrame]
+    spark: SparkSession,
+    tables: dict[str, DataFrame],
+    dictionaries: Callable[[], _Dictionaries] | None = None,
 ) -> DataFrame:
     """The pipeline with no checkpoint IO (driver contract, bench and
     streaming; production runs use run_pipeline for resumability).
@@ -128,7 +146,8 @@ def build_triples_inmem(
     spanning the whole extraction phase). The caches are attached to
     the returned triples (operators/caching.attach_cached_deps): the
     caller releases them with release_cached_deps after its last action
-    on the triples. When a later stage raises, they are released here."""
+    on the triples. When a later stage raises, they are released here.
+    ``dictionaries``: see _compose and dictionaries_once."""
     held: list[DataFrame] = []
 
     def persist(stage: str, build: Callable[[], DataFrame]) -> DataFrame:
@@ -139,7 +158,8 @@ def build_triples_inmem(
         return df
 
     try:
-        return attach_cached_deps(_compose(tables, persist), held)
+        return attach_cached_deps(
+            _compose(tables, persist, dictionaries=dictionaries), held)
     except BaseException:
         for df in held:
             df.unpersist()

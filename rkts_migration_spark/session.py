@@ -44,7 +44,36 @@ PERF_CONF = {
     # compression, which measured SLOWER end-to-end (bigger cache ->
     # more bytes through the bus on every downstream read).
     "spark.sql.inMemoryColumnarStorage.batchSize": "65536",
+    # Spark's generated-code cache is an LRU of this many classes
+    # (default 100). One run of this pipeline needs more distinct
+    # classes than that: 121 for the test fixture's in-memory run, 156
+    # for a checkpointed ckpt_65 pass, 202 for a stream_6k pass of two
+    # micro-batches. At the default the cache never hits, and every
+    # warm-JVM run and every micro-batch compiles all of its Janino
+    # classes again: a repeat fixture run compiled 84-86 classes in
+    # ~1.0 s at the default, and 6 in 0.03-0.06 s at 512 (local[4]).
+    # 512 is >= 2x the largest working set. End to end at local[4], 10
+    # pairs each: stream_6k wall -14%, ckpt_65 wall -26%. Cost: the heap
+    # a ckpt_65 pass retains rises 134 -> 202 MB (peak_rss_mb +10%);
+    # non-heap memory moves < 4%. A static conf: it takes effect only
+    # when set before the JVM's first codegen. Executor JVMs of a
+    # cluster get it from the same conf; that path is not measured.
+    # codegen_counters() counts compiles, to check that it took.
+    "spark.sql.codegen.cache.maxEntries": "512",
 }
+
+
+def codegen_counters(spark: SparkSession) -> dict:
+    """Janino compiles so far in this JVM and their total time: the
+    compile count of the codegen metrics and CodeGenerator's compile
+    time. Report the difference over a window to see what it
+    compiled; a cache hit compiles nothing."""
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return {
+        "compiles": metrics.METRIC_COMPILATION_TIME().getCount(),
+        "compile_s": codegen.CodeGenerator.compileTime() / 1e9,
+    }
 
 
 def get_spark(

@@ -21,7 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.caching import release_cached_deps
-from ..pipeline import build_triples_inmem
+from ..pipeline import build_triples_inmem, dictionaries_once
 
 
 def stream_triples(
@@ -38,13 +38,15 @@ def stream_triples(
     ``sink(batch_triples_df, batch_id)`` commits each micro-batch —
     append an Iceberg snapshot in production. The batch's pipeline
     caches are released once the sink returns: an action on the frame
-    after that recomputes it.
+    after that recomputes it. The dictionary tables are built by the
+    query's first micro-batch and reused by the rest.
     """
+    dictionaries = dictionaries_once(dict_tables)
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
         tables = dict(dict_tables)
         tables["transcripts"] = batch_df
-        triples = build_triples_inmem(batch_df.sparkSession, tables)
+        triples = build_triples_inmem(batch_df.sparkSession, tables, dictionaries)
         sink(triples, batch_id)
         release_cached_deps(triples)
 
@@ -200,13 +202,15 @@ def stream_kg_ingest(
     # run writes a fresh (zero-append) manifest under the new run's
     # tag — itself the idempotency evidence.
     run_tag = uuid.uuid4().hex[:8]
+    # built by the first micro-batch, beside its `ordered` cache build
+    dictionaries = dictionaries_once(dict_tables)
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         tables = dict(dict_tables)
         tables["transcripts"] = batch_df
         n_input = batch_df.count()
-        candidates = build_triples_inmem(spark, tables)
+        candidates = build_triples_inmem(spark, tables, dictionaries)
         cols = ["subj", "pred", "obj"]
         inc = (
             with_triple_bucket(candidates.select(cols), n_buckets)

@@ -341,6 +341,65 @@ def test_stream_releases_batch_caches(spark, tmpdir_ckpt, form):
     assert persisted() == before
 
 
+def test_stream_builds_dictionaries_once(spark, tmpdir_ckpt, monkeypatch):
+    """A stream's dictionary tables never change: its first micro-batch
+    builds them and the later ones reuse them. Over three file
+    micro-batches the canonical map is built once and the store holds
+    the union of the batches' own in-memory triples; a restart that
+    finds no new file builds nothing."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from rkts_migration_spark import pipeline
+    from rkts_migration_spark.fixtures import (
+        TRANSCRIPT_DDL,
+        fixtures_to_spark,
+        make_fixtures,
+    )
+    from rkts_migration_spark.streaming import (
+        stream_from_directory,
+        stream_kg_ingest,
+    )
+
+    tables = fixtures_to_spark(spark, make_fixtures(seed=9, n_convs=6))
+    tr = tables.pop("transcripts")
+    drops = [tr.filter(F.col("conv_id").isin([f"C{2 * k:06d}", f"C{2 * k + 1:06d}"]))
+             for k in range(3)]
+    src = os.path.join(tmpdir_ckpt, "src")
+    for drop in drops:
+        drop.coalesce(1).write.mode("append").parquet(src)
+
+    def triple_set(df):
+        return {(r["subj"], r["pred"], r["obj"]) for r in df.collect()}
+
+    expected: set = set()
+    for drop in drops:
+        expected |= triple_set(
+            pipeline.build_triples_inmem(spark, {**tables, "transcripts": drop}))
+
+    built = []
+    build_canonical_map = pipeline.build_canonical_map
+    monkeypatch.setattr(pipeline, "build_canonical_map",
+                        lambda *a, **k: built.append(1) or build_canonical_map(*a, **k))
+    store = os.path.join(tmpdir_ckpt, "store")
+    ck = os.path.join(tmpdir_ckpt, "ck")
+
+    def ingest() -> list[int]:
+        batches: list[int] = []
+        stream_kg_ingest(stream_from_directory(spark, src, TRANSCRIPT_DDL),
+                         tables, store, ck,
+                         on_batch=lambda bid, n: batches.append(bid)
+                         ).awaitTermination(300)
+        return batches
+
+    assert ingest() == [0, 1, 2]
+    assert len(built) == 1
+    assert triple_set(spark.read.parquet(store)) == expected
+    assert ingest() == []  # restart: every file is committed
+    assert len(built) == 1
+
+
 def test_stream_kg_ingest_idempotent_delta(spark, tmpdir_ckpt):
     """Continuous KG construction: three file drops (convs A, convs B,
     then an exact RE-DELIVERY of A), maxFilesPerTrigger=1 => three

@@ -171,14 +171,17 @@ def test_merge_triples_is_anti_join_no_broadcast_of_existing(spark):
 
 
 def test_session_perf_contract(spark):
-    """The two measured perf-critical session settings are part of the
+    """The measured perf-critical session settings are part of the
     factory's contract (BENCH/BASELINE.md round-5 section): the
     InferFiltersFromGenerate exclusion (the inferred size()>0 filter
-    re-evaluates the gazetteer alternation regex 3x per turn) and the
+    re-evaluates the gazetteer alternation regex 3x per turn), the
     64Ki columnar-cache batch size (the 10k default pays per-batch
     setup O(rows/batchSize) per column per consumer on the two
-    corpus-sized persisted intermediates; -11-14% flagship measured).
-    A silent revert of either would ship a measured regression.
+    corpus-sized persisted intermediates; -11-14% flagship measured)
+    and a codegen cache of at least twice the largest measured working
+    set (202 classes per stream_6k pass; the 100 default recompiles
+    every class of every warm-JVM run and micro-batch).
+    A silent revert of any would ship a measured regression.
     session.PERF_CONF is the one copy every session builder applies."""
     from rkts_migration_spark.session import PERF_CONF
 
@@ -186,9 +189,55 @@ def test_session_perf_contract(spark):
         "spark.sql.optimizer.excludedRules"
     ]
     assert PERF_CONF["spark.sql.inMemoryColumnarStorage.batchSize"] == "65536"
+    assert int(PERF_CONF["spark.sql.codegen.cache.maxEntries"]) >= 2 * 202
     for key, value in PERF_CONF.items():
         assert spark.conf.get(key) == value, key
     # compression must stay ON: disabling it measured SLOWER
     # end-to-end (bigger cache -> more bus bytes per downstream read)
     assert spark.conf.get(
         "spark.sql.inMemoryColumnarStorage.compressed", "true") == "true"
+
+
+def test_codegen_counters(spark):
+    """codegen_counters counts Janino compiles: re-running an identical
+    query hits the codegen cache and adds none, a new plan shape adds
+    some."""
+    from rkts_migration_spark.session import codegen_counters
+
+    def query(k: int):
+        return (spark.range(1000).selectExpr(f"id % {k} AS g", "id * 3 AS v")
+                .groupBy("g").sum("v"))
+
+    query(7919).collect()
+    before = codegen_counters(spark)
+    query(7919).collect()
+    again = codegen_counters(spark)
+    assert again["compiles"] == before["compiles"]
+    query(7907).collect()
+    after = codegen_counters(spark)
+    assert after["compiles"] > again["compiles"]
+    assert after["compile_s"] > again["compile_s"]
+
+
+def test_generated_code_reused_across_runs(spark):
+    """A second in-memory run of the pipeline compiles almost none of
+    its generated classes again: the session's codegen cache holds a
+    run's working set (121 classes here, measured in a new JVM). At
+    Spark's default of 100 entries the LRU cache never hits and the
+    second run recompiled 84-87."""
+    from rkts_migration_spark.fixtures import fixtures_to_spark, make_fixtures
+    from rkts_migration_spark.operators.caching import release_cached_deps
+    from rkts_migration_spark.pipeline import build_triples_inmem
+    from rkts_migration_spark.session import codegen_counters
+
+    tables = fixtures_to_spark(spark, make_fixtures(seed=42, n_convs=80))
+    compiles = []
+    for _ in range(2):
+        before = codegen_counters(spark)["compiles"]
+        triples = build_triples_inmem(spark, tables)
+        triples.count()
+        release_cached_deps(triples)
+        compiles.append(codegen_counters(spark)["compiles"] - before)
+    # in a warm JVM (this suite) earlier tests have compiled part of the
+    # working set, so the first run here may compile fewer than 121
+    assert compiles[1] <= 0.1 * max(compiles[0], 121), compiles
