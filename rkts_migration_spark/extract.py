@@ -11,7 +11,8 @@ identical semantics (tests/test_operators.py proves equivalence):
 
 2. ``extract_mentions_trie`` — batched token-level Aho-Corasick via
    ``mapInPandas`` (Arrow batches; the trie is built once per Python
-   worker from a broadcast surface list). O(text) matching independent
+   worker from a broadcast surface list, which a stream's micro-batches
+   share: extract.surfaces_broadcast). O(text) matching independent
    of gazetteer size: the scale path for real gazetteers (the
    reference's actor dictionary is 6k rows, rkts-actors.csv).
 
@@ -26,7 +27,8 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark import Broadcast
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import vocab as V
@@ -62,19 +64,34 @@ def _normalized_surfaces(gazetteer: DataFrame) -> list[str]:
     return sorted({V.norm_surface(r["surface"]) for r in rows})
 
 
+def surfaces_broadcast(
+    spark: SparkSession, surfaces: list[str]
+) -> Broadcast | None:
+    """The broadcast the trie path matches ``surfaces`` with, or None
+    when they take the regex path. Build it once for calls that share a
+    gazetteer (the micro-batches of one stream): each new broadcast
+    ships the list again and makes every Python worker rebuild its
+    trie."""
+    if len(surfaces) <= REGEX_MAX_SURFACES:
+        return None
+    return spark.sparkContext.broadcast(surfaces)
+
+
 def extract_mentions(
     turns: DataFrame,
     gazetteer: DataFrame,
     surfaces: list[str] | None = None,
+    surfaces_bc: Broadcast | None = None,
 ) -> DataFrame:
     """``surfaces`` lets callers prefetch the dictionary collect on a
     background thread (pipeline.py overlaps it with the ordered cache
-    build); when omitted the collect runs inline."""
+    build); when omitted the collect runs inline. ``surfaces_bc``: their
+    surfaces_broadcast, reused by the trie path instead of a new one."""
     if surfaces is None:
         surfaces = _normalized_surfaces(gazetteer)
     if len(surfaces) <= REGEX_MAX_SURFACES:
         return extract_mentions_regex(turns, surfaces)
-    return extract_mentions_trie(turns, surfaces)
+    return extract_mentions_trie(turns, surfaces_bc or surfaces)
 
 
 def _non_placeholder(turns: DataFrame) -> DataFrame:
@@ -173,11 +190,14 @@ def _get_trie(bc) -> TokenTrie:
     return trie
 
 
-def extract_mentions_trie(turns: DataFrame, surfaces: list[str]) -> DataFrame:
+def extract_mentions_trie(
+    turns: DataFrame, surfaces: list[str] | Broadcast
+) -> DataFrame:
     """Column pruning: only (conv_id, turn_idx, text) crosses the Arrow
-    boundary; the trie is built once per worker, not per batch."""
-    spark = turns.sparkSession
-    bc = spark.sparkContext.broadcast(surfaces)
+    boundary; the trie is built once per worker from the broadcast, not
+    per batch. ``surfaces``: the list, or a broadcast of it to share."""
+    bc = (surfaces if isinstance(surfaces, Broadcast)
+          else turns.sparkSession.sparkContext.broadcast(surfaces))
     src = _non_placeholder(turns)
 
     def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

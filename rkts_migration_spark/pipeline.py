@@ -25,9 +25,10 @@ background thread overlapped with the ``ordered`` boundary, as
 JVM-local relations (``createDataFrame`` of an Arrow table, planned as
 ``LocalRelation``). Every join with them is a forced broadcast, so they
 are bounded by driver memory already; local, they run no dictionary
-job inside a per-row stage and fork no Python worker. A stream, whose
-dictionary tables never change, hands every micro-batch one
-``dictionaries_once`` build: the first batch runs it, the rest reuse it.
+job inside a per-row stage and fork no Python worker. The same build
+makes the trie path's surface broadcast. A stream, whose dictionary
+tables never change, hands every micro-batch one ``dictionaries_once``
+build: the first batch runs it, the rest reuse it, broadcast included.
 """
 
 from __future__ import annotations
@@ -38,10 +39,11 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 
 from .canonicalize import build_abstract_lookup, build_canonical_map
-from .extract import _normalized_surfaces, extract_mentions
+from .extract import _normalized_surfaces, extract_mentions, surfaces_broadcast
 from .link import canonical_winners, link_and_canonicalize
 from .materialize import assemble_triples, build_entity_iri_map
 from .operators.caching import attach_cached_deps
@@ -57,6 +59,7 @@ REUSED = ("ordered", "linked")
 @dataclass(frozen=True)
 class _Dictionaries:
     surfaces: list[str]
+    surfaces_bc: Broadcast | None  # the trie path's; None on the regex path
     canonical_map: DataFrame
     winners: DataFrame
     entity_iri_map: DataFrame
@@ -74,8 +77,10 @@ def _build_dictionaries(tables: dict[str, DataFrame]) -> _Dictionaries:
         tables["id_remap"], tables["cross_corpus_map"], tables["same_text_map"]
     )
     abstract_lookup = build_abstract_lookup(tables["abstract_map"], canonical_map)
+    surfaces = _normalized_surfaces(tables["gazetteer"])
     return _Dictionaries(
-        surfaces=_normalized_surfaces(tables["gazetteer"]),
+        surfaces=surfaces,
+        surfaces_bc=surfaces_broadcast(tables["gazetteer"].sparkSession, surfaces),
         canonical_map=canonical_map,
         winners=_local(canonical_winners(tables["gazetteer"], canonical_map)),
         entity_iri_map=_local(build_entity_iri_map(
@@ -113,7 +118,8 @@ def _compose(
         builds = {
             "ordered": lambda: with_section_index(tables["transcripts"]),
             "mentions": lambda: extract_mentions(
-                done["ordered"], tables["gazetteer"], pending.result().surfaces
+                done["ordered"], tables["gazetteer"], pending.result().surfaces,
+                pending.result().surfaces_bc,
             ),
             "linked": lambda: link_and_canonicalize(
                 done["mentions"], pending.result().winners

@@ -60,6 +60,18 @@ PERF_CONF = {
     # cluster get it from the same conf; that path is not measured.
     # codegen_counters() counts compiles, to check that it took.
     "spark.sql.codegen.cache.maxEntries": "512",
+    # A read of a directory with more subdirectories than this lists
+    # them in a Spark job of one task per subdirectory (default 32), not
+    # on the driver. A stream's bucketed triple store has n_buckets
+    # (default 64) partition directories, so every store read in a
+    # micro-batch paid a 64-task "Listing leaf files" job of 0.3-0.45 s.
+    # At 64 the driver lists them itself: with the parallel append
+    # already in, stream_6k wall 15.37 -> 14.56 s (-5%, medians of 8
+    # seeds, local[4] on a 4-vCPU host). Measured on a local
+    # filesystem only: against an object store, where each listing is a
+    # network round trip, keep Spark's default of 32 and its parallel
+    # listing (not measured here).
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "64",
 }
 
 

@@ -91,44 +91,89 @@ def _fs_write_json(spark: SparkSession, path: str, payload: dict) -> None:
         fs.close()
 
 
+def _read_store(spark: SparkSession, store_dir: str) -> DataFrame | None:
+    """The committed triple store, or None before its first commit.
+    The layout comes from two driver-side globs (bucket directories:
+    bucketed; root part files: legacy unbucketed), so the read names
+    its schema: no footer-reading schema-inference job per micro-batch,
+    and no FileNotFoundException logged while probing a new store."""
+    from ..operators.graph import TRIPLE_BUCKET_COL
+
+    fs, _, jvm = _fs_for(spark, store_dir)
+    Path = jvm.org.apache.hadoop.fs.Path
+    schema = "subj string, pred string, obj string"
+    if fs.globStatus(Path(f"{store_dir}/{TRIPLE_BUCKET_COL}=*")):
+        schema += f", {TRIPLE_BUCKET_COL} int"
+    elif not fs.globStatus(Path(f"{store_dir}/part-*")):
+        return None
+    return spark.read.schema(schema).parquet(store_dir)
+
+
 def _store_scan_stats(
     spark: SparkSession, store_dir: str, touched: list[int]
 ) -> dict:
     """Best-effort pruning evidence for the manifest: how many bucket
-    partitions exist vs how many the anti-join read, plus the bytes
-    under the touched ones. Listing cost is bounded: one listStatus of
-    the store root (<= n_buckets entries) + one per TOUCHED bucket
+    partitions exist vs how many the anti-join read, plus the files and
+    bytes under the touched ones. One glob of the store's buckets, one
+    of the touched ones, and one content summary per touched bucket:
+    a fixed handful of driver calls per bucket, never one per file
     (∝ batch, never ∝ store)."""
     from ..operators.graph import TRIPLE_BUCKET_COL
 
-    jvm = spark._jvm
+    fs, _, jvm = _fs_for(spark, store_dir)
     Path = jvm.org.apache.hadoop.fs.Path
-    root = Path(store_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    prefix = f"{TRIPLE_BUCKET_COL}="
-    bucket_dirs = {
-        str(st.getPath().getName()): st.getPath()
-        for st in fs.listStatus(root)
-        if str(st.getPath().getName()).startswith(prefix)
-    }
-    files_read = 0
-    bytes_read = 0
-    read_dirs = 0
-    for b in touched:
-        p = bucket_dirs.get(f"{prefix}{b}")
-        if p is None:
-            continue
-        read_dirs += 1
-        for st in fs.listStatus(p):
-            if str(st.getPath().getName()).startswith("part-"):
-                files_read += 1
-                bytes_read += st.getLen()
+    prefix = f"{store_dir}/{TRIPLE_BUCKET_COL}="
+    touched_glob = prefix + "{" + ",".join(map(str, touched)) + "}"
+    # None, not empty, when a lone touched bucket is not in the store
+    read = (fs.globStatus(Path(touched_glob)) if touched else None) or []
+    sums = [fs.getContentSummary(st.getPath()) for st in read]
     return {
-        "store_buckets_total": len(bucket_dirs),
-        "store_buckets_read": read_dirs,
-        "store_files_read": files_read,
-        "store_bytes_read": bytes_read,
+        "store_buckets_total": len(fs.globStatus(Path(prefix + "*"))),
+        "store_buckets_read": len(sums),
+        "store_files_read": sum(c.getFileCount() for c in sums),
+        "store_bytes_read": sum(c.getLength() for c in sums),
     }
+
+
+def append_delta(delta: DataFrame, store_dir: str, bucketed: bool) -> int:
+    """Append ``delta`` (subj, pred, obj, plus TRIPLE_BUCKET_COL when
+    ``bucketed``) to the triple store in ONE write action; returns the
+    rows it appended, counted by that write.
+
+    Bucketed: the delta is hash-partitioned on the bucket column into
+    one partition per core before the partitioned append, so each
+    bucket goes to exactly one task and the store gains one file per
+    touched bucket (unclustered, every task would write a sliver into
+    every bucket directory). The partition count is explicit because
+    AQE coalesces a shuffle repartitioned by column alone — here into
+    a single task that wrote every bucket file serially — and leaves a
+    by-number repartition as asked. An empty delta writes no file.
+
+    The count is a ``DataFrame.observe`` ABOVE the shuffle. Below it,
+    the observation sits in the shuffle's map stage; when that stage
+    comes out empty (a re-delivered batch), AQE replaces it with an
+    empty relation, the metrics node leaves the plan, and
+    ``Observation.get`` fails.
+
+    Unbucketed (legacy layout): the same observed write without the
+    shuffle; an empty delta leaves one schema-only part file, as every
+    unpartitioned Spark write of no rows does."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from ..operators.graph import TRIPLE_BUCKET_COL
+
+    if bucketed:
+        n_tasks = delta.sparkSession.sparkContext.defaultParallelism
+        delta = delta.repartition(n_tasks, F.col(TRIPLE_BUCKET_COL))
+    else:
+        delta = delta.select("subj", "pred", "obj")
+    obs = Observation("append_delta")
+    writer = delta.observe(obs, F.count(F.lit(1)).alias("rows")).write
+    if bucketed:
+        writer = writer.partitionBy(TRIPLE_BUCKET_COL)
+    writer.mode("append").parquet(store_dir)
+    return obs.get["rows"]
 
 
 def stream_kg_ingest(
@@ -171,6 +216,14 @@ def stream_kg_ingest(
     ``on_batch(batch_id, n_appended)`` surfaces per-batch lineage
     metrics.
 
+    Commit — one write action per micro-batch (append_delta): the
+    anti-join runs inside the append, and the appended rows are counted
+    by the same job, so no delta is persisted or counted beforehand.
+    The only cache a batch holds besides the pipeline's is its bucketed
+    candidates, and only when a bucketed store exists: they are read by
+    the touched-bucket collect and again by the anti-join. No persisted
+    plan reads the store path while the append writes it.
+
     Lineage parity with the batch stages (sources/tables.write_stage):
     every processed micro-batch writes a manifest under
     ``<store_dir>/_INGEST_MANIFESTS/run_<tag>_batch_<id>.json`` (the
@@ -184,9 +237,6 @@ def stream_kg_ingest(
     manifest too, which is itself the idempotency evidence.
     """
     import uuid
-
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import functions as F
 
     from ..operators.graph import (
         TRIPLE_BUCKET_COL,
@@ -216,21 +266,19 @@ def stream_kg_ingest(
             with_triple_bucket(candidates.select(cols), n_buckets)
             .select([TRIPLE_BUCKET_COL] + cols)
             .distinct()
-            .persist()
         )
         scan_stats: dict = {}
         bucketed_store = True
-        try:
-            existing = spark.read.parquet(store_dir)
-        except AnalysisException:  # first batch: nothing committed yet
-            existing = None
+        existing = _read_store(spark, store_dir)
         if existing is not None and TRIPLE_BUCKET_COL in existing.columns:
+            # read twice: by the touched-bucket collect and the anti-join
+            inc = inc.persist()
             pruned, touched = prune_store_to_touched(existing, inc)
             delta = inc.join(
                 pruned.select([TRIPLE_BUCKET_COL] + cols),
                 on=[TRIPLE_BUCKET_COL] + cols,
                 how="left_anti",
-            ).persist()
+            )
             scan_stats = _store_scan_stats(spark, store_dir, touched)
         elif existing is not None:
             # Legacy unbucketed store: stay unpruned AND keep the
@@ -242,7 +290,7 @@ def stream_kg_ingest(
             # (ADVICE r4, high). Layout upgrades are an explicit
             # offline step: migrate_store_to_buckets(...).
             bucketed_store = False
-            delta = merge_triples(existing, candidates).persist()
+            delta = merge_triples(existing, candidates)
             import warnings
 
             warnings.warn(
@@ -254,19 +302,7 @@ def stream_kg_ingest(
             )
         else:
             delta = inc
-        n_appended = delta.count()
-        if n_appended and bucketed_store:
-            # cluster by bucket before the partitioned append: without
-            # this every shuffle task writes a sliver into every bucket
-            # dir (tasks x buckets small files per batch); clustered,
-            # the append adds ~one file per TOUCHED bucket. The extra
-            # exchange moves only the delta (batch-sized by definition).
-            (delta.repartition(F.col(TRIPLE_BUCKET_COL))
-             .write.mode("append")
-             .partitionBy(TRIPLE_BUCKET_COL).parquet(store_dir))
-        elif n_appended:
-            delta.select(cols).write.mode("append").parquet(store_dir)
-        delta.unpersist()
+        n_appended = append_delta(delta, store_dir, bucketed_store)
         inc.unpersist()
         release_cached_deps(candidates)
         _fs_write_json(

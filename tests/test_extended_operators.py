@@ -477,6 +477,219 @@ def test_stream_kg_ingest_idempotent_delta(spark, tmpdir_ckpt):
     assert all(m["input_rows"] > 0 for m in by_id.values())
 
 
+@pytest.mark.parametrize("bucketed", [True, False])
+def test_append_delta_counts_rows_in_the_write(spark, tmpdir_ckpt, bucketed):
+    """append_delta commits a delta in one write and returns the rows
+    that write appended, in both store layouts: the exact count for a
+    non-empty delta, 0 for an empty one. The empty delta has the shape
+    of a re-delivered batch, an anti-join against the store that comes
+    out empty: a count observed below the bucketed append's shuffle is
+    dropped by AQE there and fails. An empty bucketed append adds no
+    part file."""
+    import os
+
+    from rkts_migration_spark.operators.graph import (
+        TRIPLE_BUCKET_COL,
+        with_triple_bucket,
+    )
+    from rkts_migration_spark.streaming.incremental import append_delta
+
+    delta = spark.createDataFrame(
+        [(f"s{i}", "p", f"o{i}") for i in range(50)],
+        "subj string, pred string, obj string")
+    keys = ["subj", "pred", "obj"]
+    if bucketed:
+        delta = with_triple_bucket(delta, 8)
+        keys = [TRIPLE_BUCKET_COL] + keys
+    store = os.path.join(tmpdir_ckpt, "store")
+
+    def part_files() -> list[str]:
+        return sorted(os.path.join(d, f) for d, _, fs in os.walk(store)
+                      for f in fs if f.startswith("part-"))
+
+    assert append_delta(delta, store, bucketed) == 50
+    assert spark.read.parquet(store).count() == 50
+    files = part_files()
+    empty = delta.join(spark.read.parquet(store), on=keys, how="left_anti")
+    assert append_delta(empty, store, bucketed) == 0
+    assert spark.read.parquet(store).count() == 50
+    if bucketed:
+        assert part_files() == files
+
+
+def test_store_probe_and_scan_stats(spark, tmpdir_ckpt):
+    """A micro-batch finds the store's layout from a driver-side
+    listing: no store (or a root without data files) is None, root part
+    files read as the legacy unbucketed layout, bucket directories as
+    the bucketed one. The manifest's scan stats count the part files and
+    bytes under the touched buckets that exist, skip touched buckets
+    not yet written, and count every bucket for the total."""
+    import os
+
+    from rkts_migration_spark.operators.graph import (
+        TRIPLE_BUCKET_COL,
+        with_triple_bucket,
+    )
+    from rkts_migration_spark.streaming.incremental import (
+        _read_store,
+        _store_scan_stats,
+        append_delta,
+    )
+
+    assert _read_store(spark, os.path.join(tmpdir_ckpt, "absent")) is None
+    delta = spark.createDataFrame(
+        [(f"s{i}", "p", f"o{i}") for i in range(40)],
+        "subj string, pred string, obj string")
+    legacy = os.path.join(tmpdir_ckpt, "legacy")
+    append_delta(delta, legacy, bucketed=False)
+    assert _read_store(spark, legacy).columns == ["subj", "pred", "obj"]
+
+    store = os.path.join(tmpdir_ckpt, "store")
+    os.makedirs(os.path.join(store, "_INGEST_MANIFESTS"))
+    assert _read_store(spark, store) is None
+    for _ in range(2):  # two files in every bucket the delta touches
+        append_delta(with_triple_bucket(delta, 64), store, bucketed=True)
+    got = _read_store(spark, store)
+    assert TRIPLE_BUCKET_COL in got.columns and got.count() == 80
+
+    buckets = {int(d.split("=", 1)[1]): [
+        os.path.getsize(os.path.join(store, d, f))
+        for f in os.listdir(os.path.join(store, d)) if f.startswith("part-")]
+        for d in os.listdir(store) if d.startswith(f"{TRIPLE_BUCKET_COL}=")}
+    present = sorted(buckets)[:2]
+    absent = next(b for b in range(64) if b not in buckets)
+    assert _store_scan_stats(spark, store, present + [absent]) == {
+        "store_buckets_total": len(buckets),
+        "store_buckets_read": 2,
+        "store_files_read": sum(len(buckets[b]) for b in present),
+        "store_bytes_read": sum(sum(buckets[b]) for b in present),
+    }
+    for none_read in ([], [absent]):
+        assert _store_scan_stats(spark, store, none_read)["store_buckets_read"] == 0
+
+
+def test_stream_kg_ingest_one_file_per_touched_bucket(spark, tmpdir_ckpt):
+    """Each micro-batch's append is clustered by bucket: a batch adds
+    exactly one part file to every bucket directory it appends rows
+    to, and none to any other. Three drops (convs A, convs B, then A
+    re-delivered); the re-delivery touches no bucket."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from rkts_migration_spark.fixtures import (
+        TRANSCRIPT_DDL,
+        fixtures_to_spark,
+        make_fixtures,
+    )
+    from rkts_migration_spark.operators.graph import TRIPLE_BUCKET_COL
+    from rkts_migration_spark.streaming import (
+        stream_from_directory,
+        stream_kg_ingest,
+    )
+
+    tables = fixtures_to_spark(spark, make_fixtures(seed=13, n_convs=8))
+    tr = tables.pop("transcripts")
+    convs = sorted(r["conv_id"] for r in tr.select("conv_id").distinct().collect())
+    batch_a = tr.filter(F.col("conv_id").isin(convs[:4]))
+    batch_b = tr.filter(F.col("conv_id").isin(convs[4:]))
+    src = os.path.join(tmpdir_ckpt, "src")
+    for drop in (batch_a, batch_b, batch_a):
+        drop.coalesce(1).write.mode("append").parquet(src)
+    store = os.path.join(tmpdir_ckpt, "store")
+
+    def snapshot() -> tuple[dict[int, set], set]:
+        if not os.path.isdir(store):
+            return {}, set()
+        files = {
+            int(d.split("=", 1)[1]): {f for f in os.listdir(os.path.join(store, d))
+                                      if f.startswith("part-")}
+            for d in os.listdir(store) if d.startswith(f"{TRIPLE_BUCKET_COL}=")
+        }
+        rows = {tuple(r) for r in spark.read.parquet(store).select(
+            TRIPLE_BUCKET_COL, "subj", "pred", "obj").collect()}
+        return files, rows
+
+    seen = [snapshot()]
+    per_batch: list[tuple[int, int, dict, dict]] = []
+
+    def on_batch(bid: int, n: int) -> None:
+        (files0, rows0), (files, rows) = seen[-1], snapshot()
+        seen.append((files, rows))
+        new_rows = rows - rows0
+        gained = {b: len(fs - files0.get(b, set())) for b, fs in files.items()}
+        per_batch.append((n, len(new_rows),
+                          {b: k for b, k in gained.items() if k},
+                          {r[0]: 1 for r in new_rows}))
+
+    stream_kg_ingest(stream_from_directory(spark, src, TRANSCRIPT_DDL),
+                     tables, store, os.path.join(tmpdir_ckpt, "ck"),
+                     on_batch=on_batch, n_buckets=8).awaitTermination(300)
+    assert len(per_batch) == 3
+    for n, n_new, gained, touched in per_batch:
+        assert n == n_new
+        assert gained == touched
+    assert len(per_batch[0][3]) > 1 and len(per_batch[1][3]) > 1
+    assert per_batch[2][:3] == (0, 0, {})
+
+
+def test_stream_broadcasts_trie_surfaces_once(spark, tmpdir_ckpt, monkeypatch):
+    """Over a gazetteer too large for the regex path, the micro-batches
+    of one stream share one surface broadcast: it is built with the
+    dictionary tables, so a three-batch stream ships the surface list
+    once, and its Python workers keep their trie. The store still holds
+    the union of the batches' own in-memory triples."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from rkts_migration_spark import extract
+    from rkts_migration_spark.fixtures import (
+        TRANSCRIPT_DDL,
+        fixtures_to_spark,
+        make_fixtures,
+    )
+    from rkts_migration_spark.pipeline import build_triples_inmem
+    from rkts_migration_spark.streaming import (
+        stream_from_directory,
+        stream_kg_ingest,
+    )
+
+    tables = fixtures_to_spark(
+        spark, make_fixtures(seed=9, n_convs=6, n_entities=300))
+    surfaces = extract._normalized_surfaces(tables["gazetteer"])
+    assert len(surfaces) > extract.REGEX_MAX_SURFACES
+    tr = tables.pop("transcripts")
+    drops = [tr.filter(F.col("conv_id").isin([f"C{2 * k:06d}", f"C{2 * k + 1:06d}"]))
+             for k in range(3)]
+    src = os.path.join(tmpdir_ckpt, "src")
+    for drop in drops:
+        drop.coalesce(1).write.mode("append").parquet(src)
+
+    def triple_set(df):
+        return {(r["subj"], r["pred"], r["obj"]) for r in df.collect()}
+
+    expected: set = set()
+    for drop in drops:
+        expected |= triple_set(
+            build_triples_inmem(spark, {**tables, "transcripts": drop}))
+
+    sc = spark.sparkContext
+    made: list = []
+    broadcast = sc.broadcast
+    monkeypatch.setattr(sc, "broadcast",
+                        lambda value: made.append(value) or broadcast(value))
+    batches: list[int] = []
+    store = os.path.join(tmpdir_ckpt, "store")
+    stream_kg_ingest(stream_from_directory(spark, src, TRANSCRIPT_DDL),
+                     tables, store, os.path.join(tmpdir_ckpt, "ck"),
+                     on_batch=lambda bid, n: batches.append(bid)
+                     ).awaitTermination(300)
+    assert batches == [0, 1, 2]
+    assert [v for v in made if isinstance(v, list)] == [surfaces]
+    assert triple_set(spark.read.parquet(store)) == expected
+
+
 def test_late_tolerant_turn_counts_stream(spark, tmpdir_ckpt):
     """Watermark + session_window over a file stream: out-of-order
     turns within a session aggregate into one window; a gap larger

@@ -180,7 +180,10 @@ def test_session_perf_contract(spark):
     corpus-sized persisted intermediates; -11-14% flagship measured)
     and a codegen cache of at least twice the largest measured working
     set (202 classes per stream_6k pass; the 100 default recompiles
-    every class of every warm-JVM run and micro-batch).
+    every class of every warm-JVM run and micro-batch), and a
+    partition-discovery threshold that lists a stream store's default
+    64 bucket directories on the driver (at Spark's 32, every store
+    read in a micro-batch ran a 64-task listing job).
     A silent revert of any would ship a measured regression.
     session.PERF_CONF is the one copy every session builder applies."""
     from rkts_migration_spark.session import PERF_CONF
@@ -190,6 +193,8 @@ def test_session_perf_contract(spark):
     ]
     assert PERF_CONF["spark.sql.inMemoryColumnarStorage.batchSize"] == "65536"
     assert int(PERF_CONF["spark.sql.codegen.cache.maxEntries"]) >= 2 * 202
+    assert int(PERF_CONF[
+        "spark.sql.sources.parallelPartitionDiscovery.threshold"]) >= 64
     for key, value in PERF_CONF.items():
         assert spark.conf.get(key) == value, key
     # compression must stay ON: disabling it measured SLOWER
