@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .caching import attach_cached_deps
+
 PR_SCALE = 10**12  # rank micro-units: 1.0 == 10^12
 PR_DAMP_NUM = 17  # damping 0.85 as an exact rational 17/20
 PR_DAMP_DEN = 20
@@ -344,46 +346,49 @@ def prune_store_to_touched(
 
 
 def merge_triples_pruned(
-    existing: DataFrame,
+    existing: DataFrame | None,
     incoming: DataFrame,
     n_buckets: int,
     cols=("subj", "pred", "obj"),
-) -> DataFrame:
+) -> tuple[DataFrame, list[int]]:
     """Bucket-pruned incremental-ingest delta — the 100-TB form of
-    merge_triples. ``existing`` is the committed store READ FROM ITS
-    BUCKETED LAYOUT (partition column TRIPLE_BUCKET_COL, written by
-    stream_kg_ingest); ``incoming`` is the micro-batch's candidate
-    triples (bucket column optional — added here if absent).
+    merge_triples, and the one stream_kg_ingest appends. ``existing``
+    is the committed store READ FROM ITS BUCKETED LAYOUT (partition
+    column TRIPLE_BUCKET_COL), or None before its first commit;
+    ``incoming`` is the micro-batch's candidate triples.
 
-    Why this exists: the plain anti-join scans AND hash-shuffles the
-    entire store every micro-batch — per-batch cost ∝ store, which at
-    100 TB is the whole job (VERDICT r3 #2). Bucketing the store by
-    subject hash and pruning to the delta's touched buckets makes the
-    store-side cost ∝ batch × (store / n_buckets): only directories
-    whose bucket id appears in the delta are listed or scanned, and
-    the anti-join shuffles just those rows. n_buckets is chosen so one
-    bucket is a few GB (store_rows / n_buckets ≈ 10^7 rows); on the
-    Iceberg path the same layout is `bucket(N, subj)` partitioning and
-    the merge becomes MERGE INTO with merge-key partition pruning.
+    The plain anti-join scans and shuffles the whole store every
+    micro-batch (cost ∝ store). Here the candidates are bucketed by
+    subject hash like the store, and the anti-join reads only the
+    buckets they touch (cost ∝ batch × store / n_buckets); size
+    n_buckets so one bucket is a few GB. On Iceberg the same layout is
+    `bucket(N, subj)` and the merge is MERGE INTO with merge-key
+    partition pruning. The bucket, a pure function of subj, joins the
+    key so the planner can align delta and store partitions.
 
-    The bucket participates in the join key — it is a pure function of
-    subj, so adding it changes nothing semantically but lets the
-    planner align delta and store partitions. Returns the delta WITH
-    the bucket column, ready for a partitioned append.
+    Returns (delta, touched): the distinct candidates not in the
+    store, WITH the bucket column for a partitioned append, and the
+    bucket ids read (none without a store). The bucketed candidates
+    are read twice, by the touched-bucket collect and by the
+    anti-join, so they are persisted and attached to the delta
+    (operators/caching.attach_cached_deps): release them with
+    release_cached_deps after the delta's last action.
 
-    The bucket column is ALWAYS recomputed here, even if ``incoming``
-    already carries one: a caller-supplied bucket computed with a
-    different n_buckets than the store layout would prune to the WRONG
-    partitions and silently append duplicates — violating the
-    exactly-once-effect invariant (ADVICE r4). Recomputing is one
-    cheap pure-function column; trusting the input is an unverifiable
-    cross-module contract."""
+    The bucket is ALWAYS recomputed from subj, even if ``incoming``
+    carries one: a bucket computed modulo another count would prune to
+    the WRONG partitions and append duplicates (ADVICE r4). The store's
+    own count must equal ``n_buckets`` for the same reason;
+    stream_kg_ingest checks it."""
     cols = list(cols)
     inc = with_triple_bucket(incoming.select(cols), n_buckets)
     inc = inc.select([TRIPLE_BUCKET_COL] + cols).distinct()
-    pruned, _ = prune_store_to_touched(existing, inc)
-    return inc.join(
+    if existing is None:
+        return inc, []
+    inc = inc.persist()
+    pruned, touched = prune_store_to_touched(existing, inc)
+    delta = inc.join(
         pruned.select([TRIPLE_BUCKET_COL] + cols),
         on=[TRIPLE_BUCKET_COL] + cols,
         how="left_anti",
     )
+    return attach_cached_deps(delta, [inc]), touched

@@ -65,24 +65,19 @@ def stage_manifest(root: str, stage: str) -> dict | None:
 
 
 def stage_is_complete(root: str, stage: str) -> bool:
+    """Committed, with the schema ``read_stage`` opens it with. A
+    manifest written before manifests recorded the schema reads as
+    incomplete, so a resumed run rebuilds that stage."""
     m = stage_manifest(root, stage)
-    return bool(m and m.get("complete"))
+    return bool(m and m.get("complete") and "schema" in m)
 
 
-def write_stage(
-    df: DataFrame,
-    root: str,
-    stage: str,
-    run_id: str,
-    partition_by: list[str] | None = None,
-) -> dict:
+def write_stage(df: DataFrame, root: str, stage: str, run_id: str) -> dict:
     """Write a stage table, then its manifest; returns the manifest."""
     spark = df.sparkSession
     path = stage_path(root, stage)
     t0 = time.time()
     writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
 
     if _has_iceberg(spark):
         # Production path: Iceberg table, atomic snapshot commit.
@@ -99,7 +94,7 @@ def write_stage(
             shutil.rmtree(path)
         os.replace(tmp, path)
         files = [(f, pq.read_metadata(f).num_rows) for f in glob.glob(
-            os.path.join(glob.escape(path), "**", "part-*"), recursive=True)]
+            os.path.join(glob.escape(path), "part-*"))]
 
     rows: dict[int, int] = defaultdict(int)  # write partition -> rows
     for f, n in files:
@@ -132,15 +127,12 @@ def write_stage(
 
 def read_stage(spark: SparkSession, root: str, stage: str) -> DataFrame:
     """The committed table, opened with its manifest's schema: no Spark
-    job. Tables committed before manifests held a schema stored a
-    ``_part_id`` column; one fallback infers their schema and drops it."""
+    job."""
     path = stage_path(root, stage)
     if _has_iceberg(spark):
         try:
-            return spark.read.format("iceberg").load(path).drop("_part_id")
+            return spark.read.format("iceberg").load(path)
         except Exception:
             pass
-    schema = (stage_manifest(root, stage) or {}).get("schema")
-    if schema is None:
-        return spark.read.parquet(path).drop("_part_id")
-    return spark.read.schema(T.StructType.fromJson(schema)).parquet(path)
+    schema = T.StructType.fromJson(stage_manifest(root, stage)["schema"])
+    return spark.read.schema(schema).parquet(path)

@@ -20,7 +20,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.caching import release_cached_deps
+from ..operators.caching import cached_deps
 from ..pipeline import build_triples_inmem, dictionaries_once
 
 
@@ -34,21 +34,22 @@ def stream_triples(
     """Wire a streaming transcripts DataFrame through the batch pipeline.
 
     ``dict_tables``: gazetteer/id_remap/cross_corpus_map/same_text_map/
-    abstract_map/entity_props (static side inputs, broadcast each batch).
+    abstract_map/entity_props (static side inputs). The dictionary
+    tables are built once per query, by its first micro-batch, and
+    reused by the rest.
     ``sink(batch_triples_df, batch_id)`` commits each micro-batch —
     append an Iceberg snapshot in production. The batch's pipeline
-    caches are released once the sink returns: an action on the frame
-    after that recomputes it. The dictionary tables are built by the
-    query's first micro-batch and reused by the rest.
+    caches are released once the sink returns or raises: an action on
+    the frame after that recomputes it.
     """
     dictionaries = dictionaries_once(dict_tables)
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
         tables = dict(dict_tables)
         tables["transcripts"] = batch_df
-        triples = build_triples_inmem(batch_df.sparkSession, tables, dictionaries)
-        sink(triples, batch_id)
-        release_cached_deps(triples)
+        with cached_deps(build_triples_inmem(
+                batch_df.sparkSession, tables, dictionaries)) as triples:
+            sink(triples, batch_id)
 
     writer = (
         transcript_stream.writeStream.foreachBatch(per_batch)
@@ -61,19 +62,12 @@ def stream_triples(
 
 
 def _fs_write_json(spark: SparkSession, path: str, payload: dict) -> None:
-    """Write a small JSON file through the Hadoop FileSystem API, so
-    manifests share the store's scheme (file://, hdfs://, s3a://) —
-    driver-local os.makedirs/open would land manifests in a bogus
-    local directory when the store is remote (ADVICE r3). Parent
-    directories are created by FileSystem.create.
-
-    Uses a PRIVATE FileSystem instance (newInstance, closed after the
-    write): setWriteChecksum on the process-wide cached instance would
-    disable checksums for every later write on that scheme — streaming
-    checkpoint/WAL files included — not just this manifest (ADVICE r4).
-    The flag here only suppresses .crc sidecars next to the manifest
-    (LocalFileSystem writes them by default; object stores / HDFS
-    checksum internally)."""
+    """Write a small JSON file through the Hadoop FileSystem API, so it
+    shares the store's scheme (file://, hdfs://, s3a://). A private
+    FileSystem instance, closed after the write, skips the .crc sidecar
+    that LocalFileSystem writes: the flag on the shared cached instance
+    would turn checksums off for every later write on that scheme,
+    streaming checkpoints included."""
     import json
 
     jvm = spark._jvm
@@ -91,22 +85,51 @@ def _fs_write_json(spark: SparkSession, path: str, payload: dict) -> None:
         fs.close()
 
 
-def _read_store(spark: SparkSession, store_dir: str) -> DataFrame | None:
+# The bucket count a triple store is written with, recorded beside it
+# in a file that parquet readers skip.
+_BUCKETS_RECORD = "_TRIPLE_BUCKETS.json"
+
+
+def _read_store(
+    spark: SparkSession, store_dir: str, n_buckets: int
+) -> DataFrame | None:
     """The committed triple store, or None before its first commit.
-    The layout comes from two driver-side globs (bucket directories:
-    bucketed; root part files: legacy unbucketed), so the read names
-    its schema: no footer-reading schema-inference job per micro-batch,
-    and no FileNotFoundException logged while probing a new store."""
+
+    A metadata probe, no Spark job. It refuses a root of plain part
+    files (an unbucketed store), and a ``n_buckets`` other than the one
+    recorded with the store, which it records when absent: candidates
+    bucketed modulo another count miss the store rows they equal. The
+    read names its schema, so no batch infers it from footers."""
+    import json
+
     from ..operators.graph import TRIPLE_BUCKET_COL
 
     fs, _, jvm = _fs_for(spark, store_dir)
     Path = jvm.org.apache.hadoop.fs.Path
-    schema = "subj string, pred string, obj string"
-    if fs.globStatus(Path(f"{store_dir}/{TRIPLE_BUCKET_COL}=*")):
-        schema += f", {TRIPLE_BUCKET_COL} int"
-    elif not fs.globStatus(Path(f"{store_dir}/part-*")):
+    if fs.globStatus(Path(f"{store_dir}/part-*")):
+        raise ValueError(
+            f"triple store {store_dir} holds unbucketed part files; "
+            f"stream_kg_ingest only reads and appends a store "
+            f"partitioned by {TRIPLE_BUCKET_COL}")
+    record = f"{store_dir}/{_BUCKETS_RECORD}"
+    if fs.exists(Path(record)):
+        stream = fs.open(Path(record))
+        try:
+            recorded = json.loads(jvm.org.apache.commons.io.IOUtils.toString(
+                stream, "UTF-8"))["n_buckets"]
+        finally:
+            stream.close()
+        if recorded != n_buckets:
+            raise ValueError(
+                f"triple store {store_dir} is bucketed modulo {recorded}, "
+                f"not n_buckets={n_buckets}")
+    else:
+        _fs_write_json(spark, record, {"n_buckets": n_buckets})
+    if not fs.globStatus(Path(f"{store_dir}/{TRIPLE_BUCKET_COL}=*")):
         return None
-    return spark.read.schema(schema).parquet(store_dir)
+    return spark.read.schema(
+        f"subj string, pred string, obj string, {TRIPLE_BUCKET_COL} int"
+    ).parquet(store_dir)
 
 
 def _store_scan_stats(
@@ -135,44 +158,35 @@ def _store_scan_stats(
     }
 
 
-def append_delta(delta: DataFrame, store_dir: str, bucketed: bool) -> int:
-    """Append ``delta`` (subj, pred, obj, plus TRIPLE_BUCKET_COL when
-    ``bucketed``) to the triple store in ONE write action; returns the
-    rows it appended, counted by that write.
+def append_delta(delta: DataFrame, store_dir: str) -> int:
+    """Append ``delta`` (subj, pred, obj and TRIPLE_BUCKET_COL) to the
+    triple store in ONE write action; returns the rows it appended,
+    counted by that write.
 
-    Bucketed: the delta is hash-partitioned on the bucket column into
-    one partition per core before the partitioned append, so each
-    bucket goes to exactly one task and the store gains one file per
-    touched bucket (unclustered, every task would write a sliver into
-    every bucket directory). The partition count is explicit because
-    AQE coalesces a shuffle repartitioned by column alone — here into
-    a single task that wrote every bucket file serially — and leaves a
+    The delta is hash-partitioned on the bucket column into one
+    partition per core before the partitioned append, so each bucket
+    goes to exactly one task and the store gains one file per touched
+    bucket (unclustered, every task would write a sliver into every
+    bucket directory). The partition count is explicit because AQE
+    coalesces a shuffle repartitioned by column alone — here into a
+    single task that wrote every bucket file serially — and leaves a
     by-number repartition as asked. An empty delta writes no file.
 
     The count is a ``DataFrame.observe`` ABOVE the shuffle. Below it,
     the observation sits in the shuffle's map stage; when that stage
     comes out empty (a re-delivered batch), AQE replaces it with an
     empty relation, the metrics node leaves the plan, and
-    ``Observation.get`` fails.
-
-    Unbucketed (legacy layout): the same observed write without the
-    shuffle; an empty delta leaves one schema-only part file, as every
-    unpartitioned Spark write of no rows does."""
+    ``Observation.get`` fails."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from ..operators.graph import TRIPLE_BUCKET_COL
 
-    if bucketed:
-        n_tasks = delta.sparkSession.sparkContext.defaultParallelism
-        delta = delta.repartition(n_tasks, F.col(TRIPLE_BUCKET_COL))
-    else:
-        delta = delta.select("subj", "pred", "obj")
+    n_tasks = delta.sparkSession.sparkContext.defaultParallelism
     obs = Observation("append_delta")
-    writer = delta.observe(obs, F.count(F.lit(1)).alias("rows")).write
-    if bucketed:
-        writer = writer.partitionBy(TRIPLE_BUCKET_COL)
-    writer.mode("append").parquet(store_dir)
+    (delta.repartition(n_tasks, F.col(TRIPLE_BUCKET_COL))
+     .observe(obs, F.count(F.lit(1)).alias("rows"))
+     .write.partitionBy(TRIPLE_BUCKET_COL).mode("append").parquet(store_dir))
     return obs.get["rows"]
 
 
@@ -188,131 +202,72 @@ def stream_kg_ingest(
     """Continuous KG construction with idempotent appends: each
     micro-batch runs the full batch pipeline (same functions, same
     semantics), anti-joins the committed triple store and appends ONLY
-    the delta.
+    the delta. A re-delivered batch (source retry, crawler overlap,
+    checkpoint replay) computes candidates that are all in the store
+    already, so it appends nothing: at-least-once delivery gets an
+    exactly-once effect on the triple set, and the store itself is the
+    idempotency ledger.
 
-    This upgrades at-least-once delivery to exactly-once *effect* on
-    the triple set: a re-delivered batch (source retry, crawler
-    overlap, checkpoint replay) computes the same candidate triples,
-    every one of which is already in the store, so the delta is empty
-    and the append is a no-op. The store itself is the idempotency
-    ledger — no side state to maintain or expire.
+    Scale shape: the store is partitioned by
+    ``tbucket = pmod(xxhash64(subj), n_buckets)``, its only layout, and
+    operators/graph.merge_triples_pruned anti-joins each batch's
+    candidates against the buckets they touch, so per-batch store-side
+    cost is ∝ batch × (store / n_buckets), not ∝ store. Size
+    ``n_buckets`` so one bucket is a few GB. On Iceberg the store is a
+    ``bucket(n_buckets, subj)`` table and read-anti-join-append is one
+    ``MERGE INTO ... WHEN NOT MATCHED THEN INSERT`` with this plan's
+    partition pruning. ``n_buckets`` is recorded with the store before
+    its first append; each batch's store probe (_read_store) refuses a
+    root of plain part files and a run with another ``n_buckets``
+    before the batch writes anything.
 
-    Scale shape — the store is BUCKETED, the anti-join PRUNED: the
-    committed store lives partitioned by
-    ``tbucket = pmod(xxhash64(subj), n_buckets)`` (the K4 md5-bucket
-    pattern applied to the triple store), each micro-batch's
-    candidates are bucketed with the same function, and the anti-join
-    runs only against the buckets the batch actually touches
-    (operators/graph.merge_triples_pruned). Per-batch store-side cost
-    is therefore ∝ batch × (store / n_buckets), NOT ∝ store — a full
-    scan-and-shuffle of a 100-TB store per micro-batch was the r3
-    scale gap (VERDICT #2). Size ``n_buckets`` so one bucket is a few
-    GB at the deployment's store size. On a real deployment
-    ``store_dir`` is an Iceberg table partitioned by
-    ``bucket(n_buckets, subj)`` and the read-anti-join-append becomes
-    a single ``MERGE INTO ... WHEN NOT MATCHED THEN INSERT`` commit
-    whose merge-key partition pruning is this exact plan; the
-    parquet-dir fallback here has the identical dataflow.
-    ``on_batch(batch_id, n_appended)`` surfaces per-batch lineage
-    metrics.
+    Commit: one write action per micro-batch (append_delta) runs the
+    anti-join and counts the appended rows. Besides the pipeline's, a
+    batch holds one cache, the bucketed candidates merge_triples_pruned
+    attaches to the delta once a store exists; all are released once
+    the append returns or raises. No persisted plan reads the store
+    path while the append writes it.
 
-    Commit — one write action per micro-batch (append_delta): the
-    anti-join runs inside the append, and the appended rows are counted
-    by the same job, so no delta is persisted or counted beforehand.
-    The only cache a batch holds besides the pipeline's is its bucketed
-    candidates, and only when a bucketed store exists: they are read by
-    the touched-bucket collect and again by the anti-join. No persisted
-    plan reads the store path while the append writes it.
-
-    Lineage parity with the batch stages (sources/tables.write_stage):
-    every processed micro-batch writes a manifest under
+    Lineage: after its append, every micro-batch writes a manifest
     ``<store_dir>/_INGEST_MANIFESTS/run_<tag>_batch_<id>.json`` (the
-    tag namespaces stream runs — batch ids restart per checkpoint, and
-    a new run must not clobber prior lineage) AFTER its delta
-    is appended — batch id, input rows, appended triples, plus the
-    bucket-pruning scan stats (buckets/files/bytes read vs total) so
-    the ∝-batch claim is auditable per batch. Manifests go through the
-    Hadoop FileSystem API, so they share the store's scheme (hdfs://,
-    s3a:// — not driver-local POSIX). Zero-append re-deliveries get a
-    manifest too, which is itself the idempotency evidence.
+    tag is per stream run, since batch ids restart with each
+    checkpoint) with its input rows, appended triples and bucket-scan
+    stats (buckets/files/bytes read vs total), through the Hadoop
+    FileSystem API so it shares the store's scheme. A zero-append
+    re-delivery gets one too: the idempotency evidence.
+    ``on_batch(batch_id, n_appended)`` surfaces the same counts.
     """
     import uuid
 
-    from ..operators.graph import (
-        TRIPLE_BUCKET_COL,
-        merge_triples,
-        prune_store_to_touched,
-        with_triple_bucket,
-    )
+    from ..operators.graph import merge_triples_pruned
 
-    # namespace the manifests per stream RUN: batch ids restart at 0
-    # for every new checkpoint, so two runs against the same store
-    # would silently overwrite each other's lineage history if the
-    # file name carried only the batch id. A replayed batch within one
-    # run writes a fresh (zero-append) manifest under the new run's
-    # tag — itself the idempotency evidence.
+    # batch ids restart with each checkpoint: without the run's tag, a
+    # new run's manifests would overwrite an earlier run's lineage
     run_tag = uuid.uuid4().hex[:8]
     # built by the first micro-batch, beside its `ordered` cache build
     dictionaries = dictionaries_once(dict_tables)
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        existing = _read_store(spark, store_dir, n_buckets)
         tables = dict(dict_tables)
         tables["transcripts"] = batch_df
         n_input = batch_df.count()
-        candidates = build_triples_inmem(spark, tables, dictionaries)
-        cols = ["subj", "pred", "obj"]
-        inc = (
-            with_triple_bucket(candidates.select(cols), n_buckets)
-            .select([TRIPLE_BUCKET_COL] + cols)
-            .distinct()
-        )
         scan_stats: dict = {}
-        bucketed_store = True
-        existing = _read_store(spark, store_dir)
-        if existing is not None and TRIPLE_BUCKET_COL in existing.columns:
-            # read twice: by the touched-bucket collect and the anti-join
-            inc = inc.persist()
-            pruned, touched = prune_store_to_touched(existing, inc)
-            delta = inc.join(
-                pruned.select([TRIPLE_BUCKET_COL] + cols),
-                on=[TRIPLE_BUCKET_COL] + cols,
-                how="left_anti",
-            )
-            scan_stats = _store_scan_stats(spark, store_dir, touched)
-        elif existing is not None:
-            # Legacy unbucketed store: stay unpruned AND keep the
-            # append unpartitioned. A partitionBy append into a root
-            # that already holds plain part files leaves a mixed
-            # layout that the NEXT batch's read rejects (Spark's
-            # conflicting-directory-structures check) — the stream
-            # would crash permanently with a half-migrated store
-            # (ADVICE r4, high). Layout upgrades are an explicit
-            # offline step: migrate_store_to_buckets(...).
-            bucketed_store = False
-            delta = merge_triples(existing, candidates)
-            import warnings
-
-            warnings.warn(
-                f"triple store at {store_dir} is unbucketed: the "
-                "anti-join scans the full store each batch. Run "
-                "migrate_store_to_buckets() once to enable "
-                "partition-pruned ingest.",
-                stacklevel=2,
-            )
-        else:
-            delta = inc
-        n_appended = append_delta(delta, store_dir, bucketed_store)
-        inc.unpersist()
-        release_cached_deps(candidates)
+        with cached_deps(build_triples_inmem(
+                spark, tables, dictionaries)) as candidates:
+            delta, touched = merge_triples_pruned(
+                existing, candidates, n_buckets)
+            with cached_deps(delta):
+                if existing is not None:
+                    scan_stats = _store_scan_stats(spark, store_dir, touched)
+                n_appended = append_delta(delta, store_dir)
         _fs_write_json(
             spark,
             f"{store_dir}/_INGEST_MANIFESTS/"
             f"run_{run_tag}_batch_{batch_id:06d}.json",
             {"batch_id": batch_id, "input_rows": n_input,
-             "appended_triples": n_appended,
-             "store_layout": "bucketed" if bucketed_store
-             else "legacy_unbucketed", **scan_stats},
+             "appended_triples": n_appended, **scan_stats},
         )
         if on_batch is not None:
             on_batch(batch_id, n_appended)
@@ -331,53 +286,6 @@ def _fs_for(spark: SparkSession, path: str):
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
-
-
-def migrate_store_to_buckets(
-    spark: SparkSession, store_dir: str, n_buckets: int = 64
-) -> dict:
-    """One-time offline rewrite of a legacy unpartitioned triple store
-    into the bucketed layout stream_kg_ingest prunes against.
-
-    stream_kg_ingest deliberately never upgrades the layout in-band: a
-    partitioned append into a root holding plain part files creates a
-    mixed layout Spark refuses to read (ADVICE r4). This helper is the
-    explicit migration: rewrite bucketed into a sibling _MIGRATING
-    dir, swap it into place via two FileSystem renames (old root kept
-    as _LEGACY_BACKUP until the swap succeeds), carry the
-    _INGEST_MANIFESTS dir over, then drop the backup. If the process
-    dies between the renames, the backup dir still holds the complete
-    store — recovery is renaming it back. Cost: one full scan + one
-    shuffle of the store, paid once; every subsequent micro-batch then
-    prunes to touched buckets. The Iceberg analog is
-    `ALTER TABLE ... REPLACE PARTITION FIELD` + rewrite."""
-    from pyspark.sql import functions as F
-
-    from ..operators.graph import TRIPLE_BUCKET_COL, with_triple_bucket
-
-    cols = ["subj", "pred", "obj"]
-    existing = spark.read.parquet(store_dir)
-    if TRIPLE_BUCKET_COL in existing.columns:
-        return {"migrated": False, "reason": "already bucketed"}
-    n_rows = existing.count()
-    tmp = store_dir.rstrip("/") + "_MIGRATING"
-    backup = store_dir.rstrip("/") + "_LEGACY_BACKUP"
-    (with_triple_bucket(existing.select(cols), n_buckets)
-     .repartition(F.col(TRIPLE_BUCKET_COL))
-     .write.mode("overwrite").partitionBy(TRIPLE_BUCKET_COL).parquet(tmp))
-    fs, root, jvm = _fs_for(spark, store_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.rename(root, Path(backup)):
-        raise IOError(f"migration swap failed: could not move {store_dir} "
-                      f"aside to {backup}")
-    if not fs.rename(Path(tmp), root):
-        raise IOError(f"migration swap failed mid-way: store preserved at "
-                      f"{backup}; rename it back to {store_dir} to recover")
-    man = Path(backup + "/_INGEST_MANIFESTS")
-    if fs.exists(man):
-        fs.rename(man, Path(store_dir.rstrip("/") + "/_INGEST_MANIFESTS"))
-    fs.delete(Path(backup), True)
-    return {"migrated": True, "rows": n_rows, "n_buckets": n_buckets}
 
 
 def store_bucket_file_counts(spark: SparkSession, store_dir: str) -> dict:
@@ -414,9 +322,9 @@ def compact_store_buckets(
     batches x 10^3 buckets). This pass rewrites ONLY buckets whose
     file count exceeds ``max_files_per_bucket`` — cost ∝ oversized
     buckets, never ∝ store — into ceil(rows / target_rows_per_file)
-    files each, swapping per-bucket directories via rename with the
-    same crash-recovery shape as migrate_store_to_buckets (a bucket's
-    old files survive in _COMPACT_BACKUP until its swap completes).
+    files each, swapping per-bucket directories via rename (a bucket's
+    old files survive in _COMPACT_BACKUP until its swap completes, so
+    a crash between the renames is recovered by renaming it back).
 
     ``compact_label_invariant=True`` additionally applies
     compact_labels (operators/graph.py) to each rewritten bucket,

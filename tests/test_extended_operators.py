@@ -296,11 +296,14 @@ def test_stream_matches_batch(spark, tmpdir_ckpt):
     assert got == batch_triples
 
 
-@pytest.mark.parametrize("form", ["stream_triples", "stream_kg_ingest"])
-def test_stream_releases_batch_caches(spark, tmpdir_ckpt, form):
-    """Each micro-batch's in-memory pipeline caches (ordered, linked)
-    are released once its sink or append has run: over five file
-    micro-batches the persisted-RDD count ends where it began."""
+@pytest.mark.parametrize("form", ["stream_triples", "stream_kg_ingest",
+                                  "raising_sink", "raising_append"])
+def test_stream_releases_batch_caches(spark, tmpdir_ckpt, form, monkeypatch):
+    """Each micro-batch's in-memory pipeline caches (ordered, linked),
+    and the ingest's bucketed candidates, are released once its sink or
+    append has run: over five file micro-batches the persisted-RDD
+    count ends where it began. It does too when the sink, or the
+    append into an existing store, raises and fails the query."""
     import os
 
     from pyspark.sql import functions as F
@@ -310,7 +313,9 @@ def test_stream_releases_batch_caches(spark, tmpdir_ckpt, form):
         fixtures_to_spark,
         make_fixtures,
     )
+    from rkts_migration_spark.operators.graph import with_triple_bucket
     from rkts_migration_spark.streaming import (
+        incremental,
         stream_from_directory,
         stream_kg_ingest,
         stream_triples,
@@ -324,20 +329,35 @@ def test_stream_releases_batch_caches(spark, tmpdir_ckpt, form):
          .coalesce(1).write.mode("append").parquet(src))
     stream = stream_from_directory(spark, src, TRANSCRIPT_DDL)
     ck = os.path.join(tmpdir_ckpt, "ck")
+    store = os.path.join(tmpdir_ckpt, "store")
     batches: list[int] = []
 
     def persisted() -> int:
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
+    def fail(*_):
+        raise RuntimeError(f"{form} failed")
+
     before = persisted()
-    if form == "stream_triples":
-        q = stream_triples(stream, tables,
-                           lambda df, bid: batches.append(df.count()), ck)
+    if form in ("stream_triples", "raising_sink"):
+        q = stream_triples(stream, tables, fail if form == "raising_sink"
+                           else lambda df, bid: batches.append(df.count()), ck)
     else:
-        q = stream_kg_ingest(stream, tables, os.path.join(tmpdir_ckpt, "store"),
-                             ck, on_batch=lambda bid, n: batches.append(n))
-    q.awaitTermination(300)
-    assert len(batches) == 5 and all(n > 0 for n in batches)
+        if form == "raising_append":
+            # an existing store: the batch also caches its bucketed candidates
+            incremental.append_delta(with_triple_bucket(spark.createDataFrame(
+                [("s", "p", "o")], "subj string, pred string, obj string"),
+                64), store)
+            monkeypatch.setattr(incremental, "append_delta", fail)
+        q = stream_kg_ingest(stream, tables, store, ck,
+                             on_batch=lambda bid, n: batches.append(n))
+    if form.startswith("raising"):
+        with pytest.raises(Exception, match=f"{form} failed"):
+            q.awaitTermination(300)
+        assert batches == []
+    else:
+        q.awaitTermination(300)
+        assert len(batches) == 5 and all(n > 0 for n in batches)
     assert persisted() == before
 
 
@@ -477,15 +497,13 @@ def test_stream_kg_ingest_idempotent_delta(spark, tmpdir_ckpt):
     assert all(m["input_rows"] > 0 for m in by_id.values())
 
 
-@pytest.mark.parametrize("bucketed", [True, False])
-def test_append_delta_counts_rows_in_the_write(spark, tmpdir_ckpt, bucketed):
+def test_append_delta_counts_rows_in_the_write(spark, tmpdir_ckpt):
     """append_delta commits a delta in one write and returns the rows
-    that write appended, in both store layouts: the exact count for a
-    non-empty delta, 0 for an empty one. The empty delta has the shape
-    of a re-delivered batch, an anti-join against the store that comes
-    out empty: a count observed below the bucketed append's shuffle is
-    dropped by AQE there and fails. An empty bucketed append adds no
-    part file."""
+    that write appended: the exact count for a non-empty delta, 0 for
+    an empty one. The empty delta has the shape of a re-delivered
+    batch, an anti-join against the store that comes out empty: a count
+    observed below the append's shuffle is dropped by AQE there and
+    fails. An empty append adds no part file."""
     import os
 
     from rkts_migration_spark.operators.graph import (
@@ -494,36 +512,35 @@ def test_append_delta_counts_rows_in_the_write(spark, tmpdir_ckpt, bucketed):
     )
     from rkts_migration_spark.streaming.incremental import append_delta
 
-    delta = spark.createDataFrame(
+    delta = with_triple_bucket(spark.createDataFrame(
         [(f"s{i}", "p", f"o{i}") for i in range(50)],
-        "subj string, pred string, obj string")
-    keys = ["subj", "pred", "obj"]
-    if bucketed:
-        delta = with_triple_bucket(delta, 8)
-        keys = [TRIPLE_BUCKET_COL] + keys
+        "subj string, pred string, obj string"), 8)
+    keys = [TRIPLE_BUCKET_COL, "subj", "pred", "obj"]
     store = os.path.join(tmpdir_ckpt, "store")
 
     def part_files() -> list[str]:
         return sorted(os.path.join(d, f) for d, _, fs in os.walk(store)
                       for f in fs if f.startswith("part-"))
 
-    assert append_delta(delta, store, bucketed) == 50
+    assert append_delta(delta, store) == 50
     assert spark.read.parquet(store).count() == 50
     files = part_files()
     empty = delta.join(spark.read.parquet(store), on=keys, how="left_anti")
-    assert append_delta(empty, store, bucketed) == 0
+    assert append_delta(empty, store) == 0
     assert spark.read.parquet(store).count() == 50
-    if bucketed:
-        assert part_files() == files
+    assert part_files() == files
 
 
 def test_store_probe_and_scan_stats(spark, tmpdir_ckpt):
-    """A micro-batch finds the store's layout from a driver-side
-    listing: no store (or a root without data files) is None, root part
-    files read as the legacy unbucketed layout, bucket directories as
-    the bucketed one. The manifest's scan stats count the part files and
-    bytes under the touched buckets that exist, skip touched buckets
-    not yet written, and count every bucket for the total."""
+    """A micro-batch probes the store by listing it: no store (or a
+    root without data files) is None, bucket directories read as the
+    store, and a store without a recorded bucket count gets the
+    caller's. A root of plain part files, or a bucket count other than
+    the recorded one, is refused. The manifest's scan stats count
+    the part files and bytes under the touched buckets that exist, skip
+    touched buckets not yet written, and count every bucket for the
+    total."""
+    import json
     import os
 
     from rkts_migration_spark.operators.graph import (
@@ -536,21 +553,29 @@ def test_store_probe_and_scan_stats(spark, tmpdir_ckpt):
         append_delta,
     )
 
-    assert _read_store(spark, os.path.join(tmpdir_ckpt, "absent")) is None
+    assert _read_store(spark, os.path.join(tmpdir_ckpt, "absent"), 64) is None
     delta = spark.createDataFrame(
         [(f"s{i}", "p", f"o{i}") for i in range(40)],
         "subj string, pred string, obj string")
-    legacy = os.path.join(tmpdir_ckpt, "legacy")
-    append_delta(delta, legacy, bucketed=False)
-    assert _read_store(spark, legacy).columns == ["subj", "pred", "obj"]
+    unbucketed = os.path.join(tmpdir_ckpt, "unbucketed")
+    delta.write.parquet(unbucketed)
+    with pytest.raises(ValueError, match="unbucketed"):
+        _read_store(spark, unbucketed, 64)
 
     store = os.path.join(tmpdir_ckpt, "store")
     os.makedirs(os.path.join(store, "_INGEST_MANIFESTS"))
-    assert _read_store(spark, store) is None
+    assert _read_store(spark, store, 64) is None
     for _ in range(2):  # two files in every bucket the delta touches
-        append_delta(with_triple_bucket(delta, 64), store, bucketed=True)
-    got = _read_store(spark, store)
+        append_delta(with_triple_bucket(delta, 64), store)
+    got = _read_store(spark, store, 64)
     assert TRIPLE_BUCKET_COL in got.columns and got.count() == 80
+    record = os.path.join(store, "_TRIPLE_BUCKETS.json")
+    with open(record) as f:
+        assert json.load(f) == {"n_buckets": 64}
+    os.remove(record)  # a store written before the count was recorded
+    assert _read_store(spark, store, 64).count() == 80
+    with pytest.raises(ValueError, match="modulo 64, not n_buckets=16"):
+        _read_store(spark, store, 16)
 
     buckets = {int(d.split("=", 1)[1]): [
         os.path.getsize(os.path.join(store, d, f))
@@ -572,7 +597,9 @@ def test_stream_kg_ingest_one_file_per_touched_bucket(spark, tmpdir_ckpt):
     """Each micro-batch's append is clustered by bucket: a batch adds
     exactly one part file to every bucket directory it appends rows
     to, and none to any other. Three drops (convs A, convs B, then A
-    re-delivered); the re-delivery touches no bucket."""
+    re-delivered); the re-delivery touches no bucket. A later run with
+    another bucket count would miss the store's rows and append them
+    again: it fails, and the store keeps its rows and files."""
     import os
 
     from pyspark.sql import functions as F
@@ -631,6 +658,18 @@ def test_stream_kg_ingest_one_file_per_touched_bucket(spark, tmpdir_ckpt):
         assert gained == touched
     assert len(per_batch[0][3]) > 1 and len(per_batch[1][3]) > 1
     assert per_batch[2][:3] == (0, 0, {})
+
+    def listing() -> list[str]:
+        return sorted(os.path.join(d, f) for d, _, fs in os.walk(store)
+                      for f in fs)
+
+    before = snapshot(), listing()
+    q = stream_kg_ingest(stream_from_directory(spark, src, TRANSCRIPT_DDL),
+                         tables, store, os.path.join(tmpdir_ckpt, "ck16"),
+                         n_buckets=16)
+    with pytest.raises(Exception, match="n_buckets=16"):
+        q.awaitTermination(120)
+    assert (snapshot(), listing()) == before
 
 
 def test_stream_broadcasts_trie_surfaces_once(spark, tmpdir_ckpt, monkeypatch):
@@ -890,108 +929,34 @@ def test_ivf_kmeans_centroids_beat_demo_quantizer(spark):
     assert cents == kmeans_centroids(base, n_cells=3, sample_n=180, seed=42)
 
 
-def test_stream_kg_ingest_legacy_unbucketed_store(spark, tmpdir_ckpt):
-    """Ingest into a PRE-EXISTING unbucketed store must survive
-    multiple micro-batches (ADVICE r4, high): the legacy branch keeps
-    the append unpartitioned — a partitionBy append into a root with
-    plain part files would leave a mixed layout that crashes the next
-    batch's read — and stays correct (set-union, idempotent). The
-    layout only changes via the explicit migrate_store_to_buckets,
-    after which ingest runs bucket-pruned on the SAME store."""
-    import json as _json
+def test_stream_kg_ingest_refuses_unbucketed_store(spark, tmpdir_ckpt):
+    """The bucketed layout is the triple store's only one: a stream into
+    a root of plain part files fails in its first micro-batch and adds
+    no file to the store."""
     import os
-
-    from pyspark.sql import functions as F
 
     from rkts_migration_spark.fixtures import (
         TRANSCRIPT_DDL,
         fixtures_to_spark,
         make_fixtures,
     )
-    from rkts_migration_spark.operators.graph import TRIPLE_BUCKET_COL
-    from rkts_migration_spark.pipeline import build_triples_inmem
     from rkts_migration_spark.streaming import (
         stream_from_directory,
         stream_kg_ingest,
     )
-    from rkts_migration_spark.streaming.incremental import (
-        migrate_store_to_buckets,
-    )
 
-    fx = make_fixtures(seed=23, n_convs=9)
-    tables = fixtures_to_spark(spark, fx)
-    tr = tables["transcripts"]
-    convs = sorted(
-        r["conv_id"] for r in tr.select("conv_id").distinct().collect())
-    slices = [tr.filter(F.col("conv_id").isin(convs[i::3]))
-              for i in range(3)]
-    dicts = {k: v for k, v in tables.items() if k != "transcripts"}
-
-    def triple_set(df):
-        return {(r["subj"], r["pred"], r["obj"]) for r in df.collect()}
-
-    # a legacy store: batch-0 triples written UNPARTITIONED
-    store = os.path.join(tmpdir_ckpt, "legacy_store")
-    first = build_triples_inmem(spark, {**dicts, "transcripts": slices[0]})
-    first.select("subj", "pred", "obj").write.parquet(store)
-
-    # two micro-batches into the legacy store (slice 1, then slice 1
-    # re-delivered): batch 2 reads the store batch 1 appended to — the
-    # r4 bug crashed exactly here on the mixed layout
-    src = os.path.join(tmpdir_ckpt, "legacy_src")
-    os.makedirs(src)
-    for drop in (slices[1], slices[1]):
-        drop.coalesce(1).write.mode("append").parquet(src)
-    q = stream_kg_ingest(
-        stream_from_directory(spark, src, TRANSCRIPT_DDL),
-        dicts, store, os.path.join(tmpdir_ckpt, "legacy_ck"))
-    q.awaitTermination(180)
-
-    expected = triple_set(first) | triple_set(
-        build_triples_inmem(spark, {**dicts, "transcripts": slices[1]}))
-    got = spark.read.parquet(store)
-    assert TRIPLE_BUCKET_COL not in got.columns  # layout unchanged
-    assert triple_set(got) == expected
-    assert got.count() == len(expected)  # idempotent re-delivery
-    mdir = os.path.join(store, "_INGEST_MANIFESTS")
-    for name in os.listdir(mdir):
-        with open(os.path.join(mdir, name)) as f:
-            assert _json.load(f)["store_layout"] == "legacy_unbucketed"
-
-    # explicit migration, then ingest slice 2 bucket-pruned
-    res = migrate_store_to_buckets(spark, store, n_buckets=8)
-    assert res["migrated"] and res["rows"] == len(expected)
-    migrated = spark.read.parquet(store)
-    assert TRIPLE_BUCKET_COL in migrated.columns
-    assert triple_set(migrated) == expected
-    assert os.path.isdir(mdir)  # manifests carried over
-    # idempotent: re-running the migration is a no-op
-    assert migrate_store_to_buckets(spark, store, n_buckets=8) == {
-        "migrated": False, "reason": "already bucketed"}
-
-    src2 = os.path.join(tmpdir_ckpt, "post_src")
-    os.makedirs(src2)
-    slices[2].coalesce(1).write.mode("append").parquet(src2)
-    q2 = stream_kg_ingest(
-        stream_from_directory(spark, src2, TRANSCRIPT_DDL),
-        dicts, store, os.path.join(tmpdir_ckpt, "post_ck"), n_buckets=8)
-    q2.awaitTermination(180)
-    expected |= triple_set(
-        build_triples_inmem(spark, {**dicts, "transcripts": slices[2]}))
-    final = spark.read.parquet(store)
-    assert triple_set(final) == expected
-    assert final.count() == len(expected)
-    # the post-migration run wrote its manifest under its OWN run tag
-    # (runs must not clobber each other's lineage); find it by layout
-    layouts = []
-    for name in os.listdir(mdir):
-        with open(os.path.join(mdir, name)) as f:
-            layouts.append(_json.load(f))
-    bucketed = [m for m in layouts if m["store_layout"] == "bucketed"]
-    assert len(bucketed) == 1 and len(layouts) == 3
-    m = bucketed[0]
-    # pruning receipts present and partial: batch touched < total
-    assert 0 < m["store_buckets_read"] <= m["store_buckets_total"] == 8
+    tables = fixtures_to_spark(spark, make_fixtures(seed=23, n_convs=2))
+    src = os.path.join(tmpdir_ckpt, "src")
+    tables.pop("transcripts").coalesce(1).write.parquet(src)
+    store = os.path.join(tmpdir_ckpt, "store")
+    spark.createDataFrame([("s", "p", "o")],
+                          "subj string, pred string, obj string").write.parquet(store)
+    files = sorted(os.listdir(store))
+    q = stream_kg_ingest(stream_from_directory(spark, src, TRANSCRIPT_DDL),
+                         tables, store, os.path.join(tmpdir_ckpt, "ck"))
+    with pytest.raises(Exception, match="unbucketed part files"):
+        q.awaitTermination(120)
+    assert sorted(os.listdir(store)) == files
 
 
 def test_compact_store_buckets_bounds_files(spark, tmpdir_ckpt):

@@ -192,6 +192,7 @@ def test_merge_triples_pruned_recomputes_stale_bucket(spark, tmp_path):
     committed triple arriving with a stale bucket id still prunes to
     the RIGHT store partition and is excluded from the delta — the
     exactly-once-effect invariant."""
+    from rkts_migration_spark.operators.caching import release_cached_deps
     from rkts_migration_spark.operators.graph import (
         TRIPLE_BUCKET_COL,
         merge_triples_pruned,
@@ -210,21 +211,22 @@ def test_merge_triples_pruned_recomputes_stale_bucket(spark, tmp_path):
         [("s3", "p", "o3"), ("sY", "p", "oY")], schema)
     # poison: bucket ids from a 3-bucket layout on an 8-bucket store
     stale = with_triple_bucket(incoming, 3)
-    delta = merge_triples_pruned(existing, stale, n_buckets)
-    got = {(r["subj"], r["pred"], r["obj"]) for r in delta.collect()}
-    assert got == {("sY", "p", "oY")}  # committed (s3,p,o3) excluded
+    delta, touched = merge_triples_pruned(existing, stale, n_buckets)
+    rows = delta.collect()
+    assert release_cached_deps(delta) == 1  # the bucketed candidates
+    assert {(r["subj"], r["pred"], r["obj"]) for r in rows} == {
+        ("sY", "p", "oY")}  # committed (s3,p,o3) excluded
     # and the emitted bucket matches the store layout, not the stale one
-    row = delta.collect()[0]
-    fixed = with_triple_bucket(
-        spark.createDataFrame([("sY", "p", "oY")], schema), n_buckets
-    ).collect()[0]
-    assert row[TRIPLE_BUCKET_COL] == fixed[TRIPLE_BUCKET_COL]
+    fixed = with_triple_bucket(incoming, n_buckets).collect()  # s3, sY
+    assert rows[0][TRIPLE_BUCKET_COL] == fixed[1][TRIPLE_BUCKET_COL]
+    assert touched == sorted({r[TRIPLE_BUCKET_COL] for r in fixed})
 
 
 def test_merge_triples_pruned_bucketed_store(spark, tmp_path):
     """Bucket-pruned merge: same delta semantics as merge_triples, and
     the store side physically reads ONLY the touched bucket
-    directories (input_file_name over the pruned view)."""
+    directories (input_file_name over the pruned view). Without a store
+    the delta is every distinct candidate, and nothing is cached."""
     from pyspark.sql import functions as F
 
     from rkts_migration_spark.operators.graph import (
@@ -233,6 +235,7 @@ def test_merge_triples_pruned_bucketed_store(spark, tmp_path):
         prune_store_to_touched,
         with_triple_bucket,
     )
+    from rkts_migration_spark.operators.caching import release_cached_deps
 
     n_buckets = 8
     schema = "subj string, pred string, obj string"
@@ -246,8 +249,9 @@ def test_merge_triples_pruned_bucketed_store(spark, tmp_path):
     # + one brand-new subject
     incoming = spark.createDataFrame(
         [("s3", "p", "o3"), ("s3", "p", "oNEW"), ("sX", "p", "oX")], schema)
-    delta = merge_triples_pruned(existing, incoming, n_buckets)
+    delta, touched = merge_triples_pruned(existing, incoming, n_buckets)
     got = {(r["subj"], r["pred"], r["obj"]) for r in delta.collect()}
+    assert release_cached_deps(delta) == 1
     assert got == {("s3", "p", "oNEW"), ("sX", "p", "oX")}
     # delta carries the bucket column, ready for a partitioned append
     assert TRIPLE_BUCKET_COL in delta.columns
@@ -255,9 +259,9 @@ def test_merge_triples_pruned_bucketed_store(spark, tmp_path):
     # pruning evidence: the pruned store view touches only the
     # buckets of the incoming subjects
     inc_b = with_triple_bucket(incoming, n_buckets)
-    pruned, touched = prune_store_to_touched(existing, inc_b)
-    assert set(touched) == {
-        r[0] for r in inc_b.select(TRIPLE_BUCKET_COL).distinct().collect()}
+    assert touched == sorted(
+        r[0] for r in inc_b.select(TRIPLE_BUCKET_COL).distinct().collect())
+    pruned, _ = prune_store_to_touched(existing, inc_b)
     files = {r[0] for r in
              pruned.select(F.input_file_name()).distinct().collect()}
     assert files, "pruned store scan read no files"
@@ -267,3 +271,7 @@ def test_merge_triples_pruned_bucketed_store(spark, tmp_path):
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert f"{TRIPLE_BUCKET_COL}#" in plan
     assert "PartitionFilters" in plan
+
+    first, none_touched = merge_triples_pruned(None, incoming, n_buckets)
+    assert none_touched == [] and release_cached_deps(first) == 0
+    assert first.count() == 3

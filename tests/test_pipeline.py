@@ -86,7 +86,9 @@ def test_resume_from_checkpoint_without_schema(
     spark, fx, oracle_triples, tmpdir_ckpt
 ):
     """Checkpoints committed before manifests recorded the schema stored
-    a _part_id lineage column in every table; they still resume."""
+    a _part_id lineage column in every table. Their stages do not read
+    as complete: a resumed run rebuilds every stage, to the same
+    triples."""
     tables = fixtures_to_spark(spark, fx)
     run_pipeline(spark, tables, tmpdir_ckpt, run_id="a", stop_after="linked")
     for stage in ("ordered", "mentions", "linked"):
@@ -101,7 +103,7 @@ def test_resume_from_checkpoint_without_schema(
         with open(os.path.join(path, MANIFEST), "w") as f:
             json.dump(manifest, f)
     res = run_pipeline(spark, tables, tmpdir_ckpt, run_id="b", resume=True)
-    assert set(res.manifests) == {"triples"}
+    assert set(res.manifests) == set(STAGES)
     assert "_part_id" not in res.triples.columns
     got = _collect_triples(res.triples)
     p, r = precision_recall(got, oracle_triples)
